@@ -217,12 +217,6 @@ object Bench {
     * aligning the in-sweep adjudication with the BenchOne protocol. */
   private val RetryReps = 8
 
-  private def processCpuNs(): Long =
-    java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
-      case os: com.sun.management.OperatingSystemMXBean => os.getProcessCpuTime
-      case _ => -1L
-    }
-
   private def loadavg(): String =
     try {
       val parts = scala.io.Source.fromFile("/proc/loadavg").mkString.trim
@@ -260,38 +254,24 @@ object Bench {
   }
 
   /** One measured window: Reps materializations of the query, with box-state
-    * evidence captured over the whole window. */
-  private case class Window(wall: Double, cpu: Double, extCores: Double, load1: Double)
+    * evidence captured over the whole window. `failure` is set when a rep
+    * threw; such a window carries no timings. */
+  private case class Window(wall: Double, cpu: Double, extCores: Double, load1: Double,
+                            failure: Option[Throwable])
 
   private def measure(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
                       spark: SparkSession, sfDir: String, name: String,
                       reps: Int = Reps): Window = {
-    // Settle the JVM before attributing CPU to this query: the dedup/CC
-    // queries leave localCheckpoint blocks and shuffle garbage behind, and
-    // Spark's ContextCleaner only unpersists them after a GC notices the
-    // references are dead. Without this, every query AFTER a
-    // checkpoint-heavy one pays that cleanup in ITS measured window
-    // (observed as a broad ~1.6x CPU inflation). The gc runs OUTSIDE the
-    // timed reps.
-    System.gc()
     val s0 = sysStat()
     val w0 = System.nanoTime()
-    val own0 = processCpuNs()
-    val runs = (1 to reps).map { _ =>
-      val c0 = processCpuNs()
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      }
-      val wall = (System.nanoTime() - t0) / 1e9
-      val cpu = if (c0 < 0) -1.0 else (processCpuNs() - c0) / 1e9
-      (wall, cpu)
-    }
+    val own0 = Measure.processCpuNs()
+    val r = Measure.run(spark, reps)(fn(spark, sfDir))
     val windowWall = (System.nanoTime() - w0) / 1e9
-    val ownSec = if (own0 < 0) 0.0 else (processCpuNs() - own0) / 1e9
+    val ownSec = if (own0 < 0) 0.0 else (Measure.processCpuNs() - own0) / 1e9
     val ext = extCores(s0, sysStat(), ownSec, windowWall)
-    Window(runs.map(_._1).min, runs.map(_._2).min, ext, load1())
+    r.failure.foreach(e => System.err.println(s"[bench] $name failed: ${e.getMessage}"))
+    if (r.failure.isDefined) Window(-1.0, -1.0, ext, load1(), r.failure)
+    else Window(r.minWall, r.minCpu, ext, load1(), None)
   }
 
   /** Block (bounded) until external load drains below the quiet threshold.
@@ -303,11 +283,11 @@ object Bench {
     var quiet = false
     while (!quiet && System.currentTimeMillis() < deadline) {
       val s0 = sysStat()
-      val own0 = processCpuNs()
+      val own0 = Measure.processCpuNs()
       val t0 = System.nanoTime()
       Thread.sleep(GateWindowMs)
       val wall = (System.nanoTime() - t0) / 1e9
-      val ownSec = if (own0 < 0) 0.0 else (processCpuNs() - own0) / 1e9
+      val ownSec = if (own0 < 0) 0.0 else (Measure.processCpuNs() - own0) / 1e9
       lastExt = extCores(s0, sysStat(), ownSec, wall)
       quiet = lastExt >= 0 && lastExt < quietThresholdCores(s0._3)
       if (lastExt < 0) quiet = true // no /proc/stat: nothing to gate on
@@ -319,29 +299,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // SORT-based shuffle writer for ALL shuffles (r20, guide §2.2 "many
-      // small files"): with reduce counts at/below the 200-partition bypass
-      // threshold, Spark's BypassMergeSortShuffleWriter opens one TEMP FILE
-      // PER (map task x reduce partition) and then merges — on this suite's
-      // many small exchanges that is thousands of ext4 create/write/delete
-      // rounds per query, and thread-dump sampling showed 60-87% of
-      // RUNNABLE executor samples inside file syscalls (open0/unmap0/
-      // getBooleanAttributes0). The sort writer emits ONE data+index file
-      // per map task regardless of reduce count: measured r20,
-      // mm_image_neardup 6.4 -> 2.6 CPU-s, mm_media_dedup ~20 -> 11.2,
-      // kernel-bound queries unchanged. NOT scale-dependent tuning: with
-      // production reduce counts (>200) the bypass writer never engages,
-      // so this default is a no-op on a real cluster and strictly removes
-      // a small-R pathology everywhere else.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv(32)
     val loadStart = loadavg()
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
     // Warmup pass: pays the one-time janino codegen compile + C2 JIT of the
@@ -349,11 +307,8 @@ object Bench {
     // (what a long-running cluster job actually sees). sf0.01 — not 0.001 —
     // because the kernels need ~10k invocations to cross the JIT threshold.
     val warmupDir = "/root/testdata/sf0.01"
-    ordered.foreach { case (_, fn) =>
-      try fn(spark, warmupDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    }
-    val first: Seq[(String, Window)] = ordered.map { case (name, fn) =>
+    ordered.foreach { case (name, fn) => Measure.warmUp(name)(fn(spark, warmupDir)) }
+    val windows: Seq[(String, Window)] = ordered.map { case (name, fn) =>
       if (load1() > FirstWindowLoad1Gate) awaitQuietBox()
       (name, measure(fn, spark, sfDir, name))
     }
@@ -367,8 +322,8 @@ object Bench {
     // intrinsic cost either way), but nothing is taken silently.
     val baseline = loadBaseline().filter(_.sf == sfDir)
     val flagged = baseline.map { b =>
-      first.filter { case (name, w) =>
-        breaches(b, name, w.cpu, w.wall) ||
+      windows.filter { case (name, w) =>
+        w.failure.isEmpty && (breaches(b, name, w.cpu, w.wall) ||
           // committed-artifact hygiene (r13, judge #3): ANY wall read over
           // 2x its pin re-measures through the contention gate before the
           // report is emitted — sub-second wall reads taken at high load1
@@ -378,14 +333,20 @@ object Bench {
           // retry) lands in the report, so a loaded window cannot put a
           // >2x read into the canonical artifact unless a QUIET window
           // reproduces it — in which case it is real and must show.
-          b.wall.get(name).exists(wb => w.wall > 2.0 * wb)
+          b.wall.get(name).exists(wb => w.wall > 2.0 * wb))
       }.map(_._1).toSet
     }.getOrElse(Set.empty)
-    val retries: Map[String, (Window, Double)] = flagged.map { name =>
+    val (retries, failedRetries) = flagged.map { name =>
       val gateExt = awaitQuietBox()
       val fn = ordered.find(_._1 == name).get._2
       name -> (measure(fn, spark, sfDir, name, RetryReps), gateExt)
-    }.toMap
+    }.toMap.partition(_._2._1.failure.isEmpty)
+    // A query whose rep threw in either window is listed under `failed` and
+    // left out of every timing map and the totals: a fast failure is not a
+    // fast query.
+    val failed = (windows ++ failedRetries.toSeq.sortBy(_._1).map(kv => kv._1 -> kv._2._1))
+      .flatMap { case (name, w) => w.failure.map(e => name -> e) }
+    val first = windows.filterNot(kv => failed.exists(_._1 == kv._1))
     val results = first.map { case (name, w) =>
       retries.get(name) match {
         case Some((r, _)) =>
@@ -468,7 +429,11 @@ object Bench {
           }
       }.mkString("{", ",", "}")
     }.getOrElse("{}")
-    val report = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"queries_cpu":$qsCpu,"queries_wall":$qsWall,"queries_load1":$qsLoad1,"queries_ext_cores":$qsExt,"total_cpu":$totalCpu%.3f,"regressions":$regressions,"drift":$drift,"wall_drift":$wallDrift,"remeasured":$remeasured,"reps":$Reps,"loadavg_start":$loadStart,"loadavg_end":$loadEnd,"sf":"$sfDir"}"""
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    val qsFailed = failed.map { case (k, e) =>
+      "\"" + k + "\":" + om.writeValueAsString(Option(e.getMessage).getOrElse(e.toString))
+    }.mkString("{", ",", "}")
+    val report = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"queries_cpu":$qsCpu,"queries_wall":$qsWall,"queries_load1":$qsLoad1,"queries_ext_cores":$qsExt,"total_cpu":$totalCpu%.3f,"regressions":$regressions,"drift":$drift,"wall_drift":$wallDrift,"remeasured":$remeasured,"failed":$qsFailed,"reps":$Reps,"loadavg_start":$loadStart,"loadavg_end":$loadEnd,"sf":"$sfDir"}"""
     println(report)
     // Self-reported artifact (round-11, judge directive #3): the driver's
     // stdout scrape truncated the per-query maps in BENCH_r09/r10.json

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Developer utility: time ONE named SparkEntry query without paying for the
   * full bench sweep. Prints per-rep wall and process-CPU seconds plus the
   * min of each — the same estimators Bench.scala reports — so a local
@@ -23,22 +21,10 @@ object BenchOne {
     val warmupDir = if (args.length > 4) args(4) else "/root/testdata/sf0.01"
     // same sizing contract as Bench.main — a host provisioned differently
     // would otherwise silently diverge from the sweep's numbers
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // sort-based shuffle writer for all shuffles — see the measured
-      // rationale in Bench.scala (small-R bypass writer file churn)
-      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv(32)
     val fn = SparkEntry.queries(name)
     // same warmup contract as Bench: JIT + janino compile off the clock
-    (1 to warmupReps).foreach { _ =>
-      fn(spark, warmupDir).write.format("noop").mode("overwrite").save()
-    }
+    (1 to warmupReps).foreach(_ => Measure.warmUp(name)(fn(spark, warmupDir)))
     // SPARK_GRAFT_STAGES=1: per-stage skew report for the LAST rep — wall
     // (submit->complete), summed task run time, task count, and the max
     // single-task time. A stage whose max-task ~= wall while sum >> max is
@@ -65,21 +51,12 @@ object BenchOne {
         }
       })
     }
-    val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-    // protocol parity with Bench.measure: collect the warmup's garbage
-    // OUTSIDE the timed reps, or its GC worker CPU is attributed to rep 1+
-    System.gc()
-    val runs = (1 to reps).map { i =>
-      stageLog.clear()
-      val c0 = os.getProcessCpuTime; val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      val wall = (System.nanoTime() - t0) / 1e9
-      val cpu = (os.getProcessCpuTime - c0) / 1e9
-      println(f"[$name rep$i] wall=$wall%.3f cpu=$cpu%.3f")
-      (wall, cpu)
+    val r = Measure.run(spark, reps, beforeRep = _ => stageLog.clear())(fn(spark, sfDir))
+    r.reps.zipWithIndex.foreach { case (rep, i) =>
+      println(f"[$name rep${i + 1}] wall=${rep.wall}%.3f cpu=${rep.cpu}%.3f")
     }
-    println(f"[$name] min_wall=${runs.map(_._1).min}%.3f min_cpu=${runs.map(_._2).min}%.3f")
+    r.get
+    println(f"[$name] min_wall=${r.minWall}%.3f min_cpu=${r.minCpu}%.3f")
     if (!stageLog.isEmpty) {
       println("[stages: id tasks wallMs taskSumMs taskMaxMs name] (last rep, wall desc)")
       import scala.jdk.CollectionConverters._

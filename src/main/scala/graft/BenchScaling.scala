@@ -175,49 +175,6 @@ object BenchScaling {
     scaled.write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
   }
 
-  private def processCpuNs(): Long =
-    java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
-      case os: com.sun.management.OperatingSystemMXBean => os.getProcessCpuTime
-      case _ => -1L
-    }
-
-  /** Cumulative stop-the-world GC milliseconds across all collectors —
-    * the diagnosis channel for CPU-vs-rows superlinearity (GC burn is
-    * process CPU but not operator cost). */
-  private def gcMillis(): Long = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-      .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
-  }
-
-  private def time(fn: (SparkSession, String) => DataFrame,
-                   spark: SparkSession, dir: String,
-                   reps: Int, label: String): (Double, Double, Double, Long) = {
-    System.gc()
-    // rows_out rides the FIRST timed rep as an Observation (a row-count
-    // metric collected by the noop write itself) instead of an extra
-    // untimed full execution, which ~1.5x-ed harness cost per point. The
-    // observe is attached to rep 1 only so the min-over-reps window stays
-    // comparable rep-to-rep (the aggregate's cost is a rounding error, but
-    // a metric name may appear only once per plan — and this keeps even
-    // that once out of the later reps).
-    val obs = org.apache.spark.sql.Observation(s"bs_rows_$label")
-    val runs = (1 to reps).map { i =>
-      val g0 = gcMillis()
-      val c0 = processCpuNs()
-      val t0 = System.nanoTime()
-      val df = fn(spark, dir)
-      val sink = if (i == 1) df.observe(obs, count(lit(1)).as("n")) else df
-      sink.write.format("noop").mode("overwrite").save()
-      ((System.nanoTime() - t0) / 1e9, (processCpuNs() - c0) / 1e9,
-        (gcMillis() - g0) / 1e3)
-    }
-    val rows = obs.get("n").asInstanceOf[Long]
-    // report the gc window of the min-CPU rep (the number being trusted)
-    val best = runs.minBy(_._2)
-    (runs.map(_._1).min, best._2, best._3, rows)
-  }
-
   def main(args: Array[String]): Unit = {
     val baseDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outRoot = args.drop(1).headOption.getOrElse("/tmp/graft_scale")
@@ -226,18 +183,7 @@ object BenchScaling {
     val onlyScales = sys.env.get("SPARK_GRAFT_SCALING_SCALES")
       .map(_.split(",").toSet)
     val repsEnv = sys.env.get("SPARK_GRAFT_SCALING_REPS").map(_.toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      // sort-based shuffle writer for all shuffles — see the measured
-      // rationale in Bench.scala (small-R bypass writer file churn)
-      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv(32)
 
     // (tag, replicas, sf-equivalent label)
     val allScales = Seq(("x0.1", 0, "sf0.01"), ("x1", 1, "sf0.1"),
@@ -261,11 +207,7 @@ object BenchScaling {
     val all = (docQs ++ nmQs).filter(q => onlyQs.forall(_.contains(q)))
 
     // JIT/codegen warmup on the smallest corpus
-    all.foreach { q =>
-      try SparkEntry.queries(q)(spark, s"$outRoot/x0.1")
-        .write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => System.err.println(s"[scaling] warmup $q: $e") }
-    }
+    all.foreach(q => Measure.warmUp(q)(SparkEntry.queries(q)(spark, s"$outRoot/x0.1")))
 
     val out = new StringBuilder("{")
     var firstQ = true
@@ -275,8 +217,14 @@ object BenchScaling {
       var firstS = true
       scales.foreach { case (tag, _, sfLabel) =>
         val reps = repsEnv.getOrElse(2)
-        val (wall, cpu, gc, rows) = time(SparkEntry.queries(q), spark,
-          s"$outRoot/$tag", reps, s"${q}_$tag")
+        // rows_out rides the first timed rep as an observed metric instead
+        // of an extra untimed full execution, which ~1.5x-ed harness cost
+        val r = Measure.run(spark, reps, rowsMetric = Some(s"bs_rows_${q}_$tag"))(
+          SparkEntry.queries(q)(spark, s"$outRoot/$tag")).get
+        val rows = r.rows.get
+        val wall = r.minWall
+        // the gc window of the min-CPU rep (the number being trusted)
+        val Measure.Rep(_, cpu, gc) = r.reps.minBy(_.cpu)
         val rowsIn = if (docQs.contains(q)) docRows(tag) else partRows(tag)
         if (!firstS) out.append(","); firstS = false
         out.append(f"""\"$tag\":{"sf":"$sfLabel","rows_in":$rowsIn,"rows_out":$rows,"wall":$wall%.3f,"cpu":$cpu%.3f,"gc_stw":$gc%.3f}""")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Regeneration main for the PINNED-OUTPUT oracles (r19 verdict #7):
   * re-runs the three queries whose oracles pin measured constants —
   * `ss_recall_trained`, `ss_knn_ivfsq8_trained` (MLlib-trained centroids,
@@ -24,18 +22,7 @@ object PinGen {
       if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
         "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      // sort-based shuffle writer for all shuffles — see the measured
-      // rationale in Bench.scala (small-R bypass writer file churn)
-      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv(4)
 
     def block(name: String, body: String): Unit =
       println(s"// PIN-SPLICE $name\n$body\n// PIN-SPLICE-END")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Developer utility: write `.explain("formatted")` for named SparkEntry
   * queries to files — the before/after plan evidence for optimization
   * rounds (plans/r20/<query>_before.txt pattern).
@@ -26,14 +24,7 @@ object PlanDump {
       if (args(2) == "ALL") SparkEntry.queries.keys.toSeq.sorted
       else args(2).split(",").toSeq.map(_.trim).filter(_.nonEmpty)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv(32)
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       val fn = SparkEntry.queries(name)

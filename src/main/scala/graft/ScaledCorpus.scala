@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Materialize a beyond-bench-scale corpus directory for the HASH-VERIFIED
   * oracle replay (VERDICT r16 #3): the BenchScaling replication recipe
   * (token-tagged documents, letter-tagged part names, key-offset lineitem,
@@ -56,13 +54,7 @@ object ScaledCorpus {
       manifestFile.getParentFile.mkdirs()
       java.nio.file.Files.writeString(manifestFile.toPath, manifest)
     }
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv(16, defaultShuffle = Some(32))
     def build(table: String)(write: => Unit): Unit =
       if (new java.io.File(s"$outDir/$table.parquet/_SUCCESS").exists())
         println(s"[scaled-corpus] skip $table (complete write present)")

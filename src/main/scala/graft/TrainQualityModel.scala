@@ -9,13 +9,7 @@ import org.apache.spark.sql.functions._
 object TrainQualityModel {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv(8)
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     // the label: the DSIR gate's own verdict (llr_fp >= -10*2^30, the
     // tx_dsir convention) — the model learns a cheap scan-side

@@ -1,29 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_SHUFFLE: shuffle-partition override (defaults to the core
-    // count, the repo-wide local convention). The beyond-bench-scale replay
-    // re-runs the dump at a scaled partition count to prove the answers are
-    // partition-count-invariant — the hash-level version of the
+    // SPARK_GRAFT_SHUFFLE (read by GraftSession) lets the beyond-bench-scale
+    // replay re-run the dump at a scaled partition count to prove the answers
+    // are partition-count-invariant — the hash-level version of the
     // BENCH_SCALING.md caveat that fixed-32 partitions can't exercise how a
     // real cluster scales partitions with data.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      // sort-based shuffle writer for all shuffles — see the measured
-      // rationale in Bench.scala (small-R bypass writer file churn)
-      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv(4)
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_QUERIES: optional comma-separated restriction, used by the
     // beyond-bench-scale replay (tools/scale_check.sh) to dump only the

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dev-loop companion to [[Verify]]: dump ONE query (or a comma list) plus
@@ -15,17 +14,7 @@ object VerifyOne {
       sys.exit(2)
     }
     val Array(names, sfDir, outDir) = args.take(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // sort-based shuffle writer for all shuffles — see the measured
-      // rationale in Bench.scala (small-R bypass writer file churn)
-      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv(4)
     new java.io.File(outDir).mkdirs()
     val picked = names.split(",").toSeq
     picked.foreach { name =>

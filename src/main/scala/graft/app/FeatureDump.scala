@@ -1,6 +1,5 @@
 package graft.app
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ml.MatchModel
 
@@ -18,12 +17,7 @@ import graft.ml.MatchModel
 object FeatureDump {
   def main(args: Array[String]): Unit = {
     val Array(inCsv, outDir) = args.take(2)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.fromEnv(8)
     val pairs = spark.read.option("header", "true").csv(inCsv)
     MatchModel.buildFeatures(pairs)
       .select(col("id"), col("levenshtein"), col("partial_ratio"),

@@ -1,6 +1,5 @@
 package graft.app
 
-import org.apache.spark.sql.SparkSession
 import graft.pipeline.MatchPipeline
 import graft.schema.EmployeeNormalizer
 
@@ -24,14 +23,7 @@ object MatchCli {
     val Array(employeesPath, usernamesPath, outDir) = positional
     val separators = flags.contains("--separators")
     val singleFile = !flags.contains("--multi-part")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.ui.enabled", "false")
-      .appName("graft-match")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.fromEnv(32, master = sys.env.get("SPARK_MASTER"))
 
     val employeesRaw = spark.read.option("header", "true").csv(employeesPath)
     val employees = EmployeeNormalizer.normalize(employeesRaw)

@@ -33,10 +33,6 @@ object Bloom {
     Integer.highestOneBit(math.max(64, math.min(m, 1L << 30)).toInt - 1) << 1
   }
 
-  /** Optimal probe count for a bits-per-element budget: k = m/n ln 2. */
-  def hashesFor(numBits: Int, n: Long): Int =
-    math.max(1, math.round(numBits.toDouble / math.max(1L, n) * math.log(2)).toInt)
-
   def setBit(words: Array[Long], idx: Int): Unit =
     words(idx >>> 6) |= (1L << (idx & 63))
 

@@ -1160,7 +1160,7 @@ object Dedup {
       // lineage-pure checkpoint = false path keeps the explicit early-exit
       // probe — with no eager action there is nothing to observe.
       //
-      // STRING-form observe, NOT org.apache.spark.sql.Observation: on
+      // STRING-form observe, NOT the Observation API: on
       // Spark 4.1.2 the first Observation registration materializes the
       // session's lazy `observationManager`, a NON-TRANSIENT field whose
       // class is not java-serializable — after which ANY closure that

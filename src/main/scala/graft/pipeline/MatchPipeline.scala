@@ -223,11 +223,6 @@ object MatchPipeline {
       .withColumn("match_type", rankLabel(col("rank")))
   }
 
-  /** Top-k >= threshold matches per username, dense-rank labeled. */
-  def rankedMatches(usernames: DataFrame, employees: DataFrame,
-                    topK: Int = TopK, threshold: Double = ScoreThreshold): DataFrame =
-    rankedTopK(usernames, employees, topK).filter(col("score") >= threshold)
-
   /**
    * Full output contract of the reference (username, emp_id, emp_name,
    * confidence_score, match_type), including USER NOT FOUND sentinel rows.

@@ -144,31 +144,4 @@ object MatchScore {
     when(isPattern, lit(100.0))
       .otherwise(least(coalesce(composite, lit(0.0)), lit(100.0)))
   }
-
-  /** Convenience single-expression form (no hoisting) — used for unit tests
-    * and small inputs; the pipeline uses the invariant-hoisted form. */
-  def matchScore(username: Column, employeeName: Column,
-                 firstName: Column, lastName: Column): Column = {
-    val u = lower(trim(username.cast("string")))
-    val f = lower(trim(firstName.cast("string")))
-    val l = lower(trim(lastName.cast("string")))
-    val en = lower(trim(employeeName.cast("string")))
-    val parts = split(u, "[._\\-\\s]")
-    val dotParts = split(u, "\\.")
-    scoreFromInvariants(
-      u,
-      coalesce(try_element_at(parts, lit(1)), lit("")),
-      when(size(parts) > 1, try_element_at(parts, lit(2))).otherwise(lit("")),
-      soundex_jf(u), metaphone(u),
-      substring(u, 1, 1),
-      when(size(dotParts) > 1, substring(try_element_at(dotParts, lit(2)), 1, 1)).otherwise(lit("")),
-      f, l, en,
-      soundex_jf(f), soundex_jf(l), metaphone(f), metaphone(l),
-      substring(f, 1, 1),
-      array(
-        concat(f, lit("."), l), concat(l, lit("."), f),
-        concat(f, lit("_"), l), concat(l, lit("_"), f),
-        concat(f, l), concat(l, f),
-        concat(f, lit(" "), l), concat(l, lit(" "), f)))
-  }
 }

@@ -5,10 +5,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 /**
- * Corpus interchange formats beyond parquet: JSON-Lines (the lingua franca
- * training corpora are shipped in) and ORC (the other columnar format Spark
- * writes natively). Thin, deliberately opinionated wrappers over Spark's
- * built-in sources:
+ * Corpus interchange beyond parquet: JSON-Lines, the lingua franca
+ * training corpora are shipped in. Thin, deliberately opinionated wrappers
+ * over Spark's built-in JSON source:
  *
  *  - JSONL reads take an EXPLICIT schema — schema inference scans the data
  *    once before the real read (a full extra pass at 100 TB) and can drift
@@ -40,10 +39,4 @@ object Interchange {
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .json(path)
-
-  def writeOrc(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").orc(path)
-
-  def readOrc(spark: SparkSession, path: String): DataFrame =
-    spark.read.orc(path)
 }

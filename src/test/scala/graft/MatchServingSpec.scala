@@ -15,9 +15,9 @@ class MatchServingSpec extends AnyFunSuite {
 
   test("streamed username batches' union equals one batch-mode matchOutput") {
     val employees = EmployeeNormalizer.normalize(
-      spark.read.option("header", "true").csv("/root/reference/employee.csv"))
+      spark.read.option("header", "true").csv(s"${SparkTestBase.ReferenceDir}/employee.csv"))
     val usernames = spark.read.option("header", "true")
-      .csv("/root/reference/usernames.csv")
+      .csv(s"${SparkTestBase.ReferenceDir}/usernames.csv")
       .select(col("Username").as("username"))
 
     val base = java.nio.file.Files.createTempDirectory("graft_serve").toString
@@ -82,9 +82,9 @@ class MatchServingSpec extends AnyFunSuite {
 
   test("blocked serving path: stream == batch, and blocked == unblocked on the fixture") {
     val employees = EmployeeNormalizer.normalize(
-      spark.read.option("header", "true").csv("/root/reference/employee.csv"))
+      spark.read.option("header", "true").csv(s"${SparkTestBase.ReferenceDir}/employee.csv"))
     val usernames = spark.read.option("header", "true")
-      .csv("/root/reference/usernames.csv")
+      .csv(s"${SparkTestBase.ReferenceDir}/usernames.csv")
       .select(col("Username").as("username"))
 
     val base = java.nio.file.Files.createTempDirectory("graft_serve_blk").toString

@@ -713,6 +713,18 @@ class OperatorsSpec extends AnyFunSuite {
     try oos.writeObject(spark) finally oos.close()
   }
 
+  test("the measurement loop's row count leaves the session serializable") {
+    // Measure.run reads its row count through a string-named observe and a
+    // QueryExecutionListener, never an Observation (see the test above)
+    val r = Measure.run(spark, reps = 1, rowsMetric = Some("measure_rows_probe"))(
+      spark.range(5).toDF())
+    assert(r.failure.isEmpty, r.failure.toString)
+    assert(r.rows === Some(5L))
+    assert(r.reps.size === 1)
+    val oos = new java.io.ObjectOutputStream(java.io.OutputStream.nullOutputStream())
+    try oos.writeObject(spark) finally oos.close()
+  }
+
   test("mmr rerank: duplicates demoted, lambda=1 reduces to relevance order") {
     // query along e1; c1/c2 are near-identical top hits, c3 is orthogonal-ish
     def v(xs: Double*): Array[Float] = xs.map(_.toFloat).toArray

@@ -865,18 +865,22 @@ class PlanShapeSpec extends AnyFunSuite {
       .mode("overwrite").parquet(corpusDir)
     val docs = spark.read.parquet(corpusDir)
     val corpus = docs.filter(pmod(col("doc_id"), lit(97)) =!= 0)
-    // eval side pinned in memory BEFORE the listener registers, so every
-    // corpus-file relation counted below is a genuine corpus pass
+    // eval side pinned in memory BEFORE the listener registers. Its
+    // checkpoint job's event can still reach the async listener bus after
+    // registration, so only executions created after this watermark count:
+    // every corpus-file relation counted below is a genuine corpus pass
     val evalDf = docs.filter(pmod(col("doc_id"), lit(97)) === 0).localCheckpoint()
+    val watermark = spark.range(0).queryExecution.id
     @volatile var corpusScans = 0
     val listener = new QueryExecutionListener {
-      private def count(qe: QueryExecution): Int = qe.analyzed.collect {
-        case l: LogicalRelation => l.relation match {
-          case fs: HadoopFsRelation
-            if fs.location.rootPaths.exists(_.toString.contains(tag)) => 1
-          case _ => 0
-        }
-      }.sum
+      private def count(qe: QueryExecution): Int =
+        if (qe.id <= watermark) 0 else qe.analyzed.collect {
+          case l: LogicalRelation => l.relation match {
+            case fs: HadoopFsRelation
+              if fs.location.rootPaths.exists(_.toString.contains(tag)) => 1
+            case _ => 0
+          }
+        }.sum
       override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
         corpusScans += count(qe)
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =

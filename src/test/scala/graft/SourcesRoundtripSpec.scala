@@ -13,7 +13,7 @@ class SourcesRoundtripSpec extends AnyFunSuite {
   import spark.implicits._
 
   private lazy val roster = EmployeeNormalizer.normalize(
-    spark.read.option("header", "true").csv("/root/reference/employee.csv"))
+    spark.read.option("header", "true").csv(s"${SparkTestBase.ReferenceDir}/employee.csv"))
 
   private def asSet(df: org.apache.spark.sql.DataFrame): Set[(String, String, String, String)] =
     df.select("emp_id", "first_name", "last_name", "employee_name")

@@ -5,20 +5,14 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for the whole test JVM. */
 object SparkTestBase {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      // sort-based shuffle writer for all shuffles — see the measured
-      // rationale in Bench.scala (small-R bypass writer file churn)
-      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = GraftSession(cores = 4, shuffle = 4)
     graft.functions.registerAll(s)
     s
   }
+  /** The reference workload's inputs (employee.csv, usernames.csv), rebuilt
+    * from fixtures/match_golden.csv by tools/gen_reference_inputs.py. */
+  val ReferenceDir: String =
+    new java.io.File(getClass.getResource("/reference").toURI).getPath
   val Sf0001 = "/root/testdata/sf0.001"
   val Sf001 = "/root/testdata/sf0.01"
   val Sf01 = "/root/testdata/sf0.1"
