@@ -451,6 +451,183 @@ object Fuzz {
     r * 0.2 + p * 0.2 + t1 * 0.2 + t2 * 0.3 + t3 * 0.2
   }
 
+  // ---- integer upper bounds of the composite's fuzzy terms ----------------
+  //
+  // Filter-then-verify for the thresholded match: a pair whose bound on the
+  // composite is below the threshold cannot qualify, so its three LLCS scans
+  // and three token-set merges never run. Every bound rests on one fact:
+  // an LCS pairs equal chars, so it matches at most min(count_a(c),
+  // count_b(c)) copies of each char c — the "bag distance" cap
+  // LCS <= sum over c of min(count_a(c), count_b(c)). Counting chars in
+  // buckets (several chars per bucket) only raises each min, so the sum
+  // stays an upper bound.
+  //
+  // A bound profile of a string s is a long array, computed once per row
+  // on either side of the join:
+  //   [0]        s.length (bits 0-15; UTF-16 units, as the kernels count),
+  //              the length of preprocTokens(s) joined by ' ' (bits 16-31),
+  //              the token count n (bits 32-47), and bit 63 set when any
+  //              field overflows (the profile then bounds nothing)
+  //   [1, 5)     bucket counts of s, one byte lane per bucket
+  //   [5, 9)     bucket counts of the joined token string
+  //   [9, 9+n)   String.hashCode of each token
+  // Lanes hold counts up to 127, so the per-pair sum of minima runs as
+  // SWAR arithmetic on four longs per histogram.
+
+  /** Histogram buckets: 'a'..'z', one for digits, one for ' ', and one
+    * catch-all for every other char (punctuation, upper case, non-ASCII);
+    * 29 of the 32 byte lanes. */
+  private def bucket(c: Char): Int =
+    if (c >= 'a' && c <= 'z') c - 'a'
+    else if (c >= '0' && c <= '9') 26
+    else if (c == ' ') 27
+    else 28
+
+  private final val RawHist = 1
+  private final val JoinedHist = 5
+  private final val TokHashes = 9
+  private final val Overflow = 1L << 63
+
+  /** Counts `s`'s chars into the byte lanes of `lanes` (32 of them). */
+  private def countInto(lanes: Array[Int], s: String): Unit = {
+    var i = 0
+    while (i < s.length) { lanes(bucket(s.charAt(i))) += 1; i += 1 }
+  }
+
+  /** Packs 32 lane counts into out(at until at+4); false when one exceeds 127. */
+  private def packLanes(lanes: Array[Int], out: Array[Long], at: Int): Boolean = {
+    var k = 0
+    while (k < 32) {
+      if (lanes(k) > 127) return false
+      out(at + k / 8) |= lanes(k).toLong << (8 * (k % 8))
+      k += 1
+    }
+    true
+  }
+
+  /** The bound profile of `s` (layout above). */
+  private[graft] def boundProfile(s: String): Array[Long] = {
+    val toks = preprocTokens(s)
+    val out = new Array[Long](TokHashes + toks.length)
+    val raw = new Array[Int](32)
+    countInto(raw, s)
+    val joined = new Array[Int](32)
+    var joinedLen = 0
+    var i = 0
+    while (i < toks.length) {
+      if (i > 0) { joined(bucket(' ')) += 1; joinedLen += 1 }
+      countInto(joined, toks(i))
+      joinedLen += toks(i).length
+      out(TokHashes + i) = toks(i).hashCode
+      i += 1
+    }
+    val fits = s.length <= 0xFFFF && joinedLen <= 0xFFFF && toks.length <= 0xFFFF &&
+      packLanes(raw, out, RawHist) && packLanes(joined, out, JoinedHist)
+    out(0) = if (!fits) Overflow
+      else s.length.toLong | (joinedLen.toLong << 16) | (toks.length.toLong << 32)
+    out
+  }
+
+  /** [[boundProfile]] as the column value of [[graft.functions.FuzzBoundProfile]]. */
+  def boundProfileArrayData(s: org.apache.spark.unsafe.types.UTF8String)
+      : org.apache.spark.sql.catalyst.util.ArrayData =
+    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+      .fromPrimitiveArray(boundProfile(s.toString))
+
+  private type Prof = org.apache.spark.sql.catalyst.util.ArrayData
+
+  private def overflows(a: Prof, b: Prof): Boolean =
+    (a.getLong(0) | b.getLong(0)) < 0L
+  private def rawLen(p: Prof): Int = (p.getLong(0) & 0xFFFF).toInt
+  private def joinedLen(p: Prof): Int = ((p.getLong(0) >>> 16) & 0xFFFF).toInt
+  private def tokCount(p: Prof): Int = ((p.getLong(0) >>> 32) & 0xFFFF).toInt
+
+  private final val LaneHigh = 0x8080808080808080L
+  private final val EvenLanes = 0x00FF00FF00FF00FFL
+
+  /** Sum over buckets of the smaller count of the histograms at `at`: the
+    * LCS cap of the two strings. Per long: (x | high bits) - y keeps each
+    * lane's high bit exactly where x >= y (lanes are <= 127, so no borrow
+    * crosses a lane); that picks min(x, y) per lane, and pairs of lanes are
+    * summed into 16-bit fields that a final multiply adds up. */
+  private def sumMin(a: Prof, b: Prof, at: Int): Int = {
+    var acc = 0L
+    var i = at
+    while (i < at + 4) {
+      val x = a.getLong(i)
+      val y = b.getLong(i)
+      val xGe = ((((x | LaneHigh) - y) & LaneHigh) >>> 7) * 0xFF
+      val mn = (y & xGe) | (x & ~xGe)
+      acc += (mn & EvenLanes) + ((mn >>> 8) & EvenLanes)
+      i += 1
+    }
+    ((acc * 0x0001000100010001L) >>> 48).toInt
+  }
+
+  /** The kernel's 200*LCS/lensum with the LCS replaced by its cap. Identical
+    * strings give 100, like the kernel's shortcut. */
+  private def ratioCap(cap: Int, lensum: Int): Int =
+    if (lensum == 0) 100 else rint100(200.0 * cap / lensum)
+
+  /** Upper bound on `ratio(a, b)` from the two strings' bound profiles. */
+  def ratioUB(a: Prof, b: Prof): Int =
+    if (overflows(a, b)) 100
+    else ratioCap(sumMin(a, b, RawHist), rawLen(a) + rawLen(b))
+
+  /** Upper bound on `partialRatio(a, b)`. */
+  def partialRatioUB(a: Prof, b: Prof): Int =
+    if (overflows(a, b)) 100
+    else partialCap(sumMin(a, b, RawHist), rawLen(a), rawLen(b))
+
+  /** A window of length w scores 200*LCS/(m+w) with LCS <= min(w, B),
+    * B = min(m, cap); that is largest at w = B, giving 200*B/(m+B). Empty
+    * strings score as in the kernel. */
+  private def partialCap(cap: Int, la: Int, lb: Int): Int = {
+    if (la == 0 && lb == 0) return 100
+    if (la == 0 || lb == 0) return 0
+    val m = math.min(la, lb)
+    val b = math.min(m, cap)
+    rint100(200.0 * b / (m + b))
+  }
+
+  /** Upper bound on `tokenSetRatio(a, b)`: 0 when either side has no token
+    * (the kernel's answer), 100 when the token sets may intersect (equal
+    * tokens have equal hashes), and otherwise the ratio bound of the two
+    * space-joined token strings — with no common token the kernel's
+    * intersection is empty and only ratio(joinedA, joinedB) can be non-zero. */
+  def tokenSetRatioUB(a: Prof, b: Prof): Int = {
+    if (overflows(a, b)) return 100
+    val na = tokCount(a)
+    val nb = tokCount(b)
+    if (na == 0 || nb == 0) return 0
+    var i = 0
+    while (i < na) {
+      val h = a.getLong(TokHashes + i)
+      var j = 0
+      while (j < nb) { if (b.getLong(TokHashes + j) == h) return 100; j += 1 }
+      i += 1
+    }
+    ratioCap(sumMin(a, b, JoinedHist), joinedLen(a) + joinedLen(b))
+  }
+
+  /** Upper bound on [[compositeFuzzPre]] for the same (u, en, l, f), from
+    * their bound profiles: each term replaced by its integer bound, then the
+    * kernel's exact weighted sum (same promotions, same left-to-right adds).
+    * Rounding to nearest is monotone, so the result is >= the kernel's
+    * double bit for bit. Reads only the hoisted profiles: nothing is
+    * decoded to a String per pair. */
+  def compositeFuzzUB(u: Prof, en: Prof, l: Prof, f: Prof): Double = {
+    // ratio and partial_ratio share one cap of the raw strings
+    val ok = !overflows(u, en)
+    val cap = if (ok) sumMin(u, en, RawHist) else 0
+    val r = if (ok) ratioCap(cap, rawLen(u) + rawLen(en)) else 100
+    val p = if (ok) partialCap(cap, rawLen(u), rawLen(en)) else 100
+    val t1 = tokenSetRatioUB(u, en)
+    val t2 = tokenSetRatioUB(u, l)
+    val t3 = tokenSetRatioUB(u, f)
+    r * 0.2 + p * 0.2 + t1 * 0.2 + t2 * 0.3 + t3 * 0.2
+  }
+
   private def appendTok(sb: java.lang.StringBuilder, t: String): Unit = {
     if (sb.length > 0) sb.append(' ')
     sb.append(t)

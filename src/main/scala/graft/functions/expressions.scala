@@ -174,6 +174,44 @@ case class FuzzCompositePre(u: Expression, en: Expression,
     copy(newChildren(0), newChildren(1), newChildren(2), newChildren(3), newChildren(4))
 }
 
+/** [[Fuzz.boundProfile]] as a column: the character histograms, lengths and
+  * token hashes [[FuzzCompositeUB]] reads, hoisted to once per row on each
+  * side of the scoring join. */
+case class FuzzBoundProfile(child: Expression) extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes: Seq[DataType] = Seq(StringType)
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def foldable: Boolean = child.foldable
+  override def nullSafeEval(a: Any): Any =
+    Fuzz.boundProfileArrayData(a.asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, a => s"graft.functions.Fuzz.boundProfileArrayData($a)")
+  override def prettyName: String = "fuzz_bound_profile"
+  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
+}
+
+/** Upper bound on [[FuzzCompositePre]] from the [[FuzzBoundProfile]]s of
+  * (u, en, l, f) ([[Fuzz.compositeFuzzUB]]): >= the composite on every row
+  * where both are non-null, and null on exactly the rows where it is (each
+  * profile is null exactly when its source string is). */
+case class FuzzCompositeUB(first: Expression, second: Expression,
+                           third: Expression, fourth: Expression)
+    extends org.apache.spark.sql.catalyst.expressions.QuaternaryExpression
+    with ExpectsInputTypes {
+  override def inputTypes: Seq[DataType] = Seq.fill(4)(ArrayType(LongType))
+  override def dataType: DataType = DoubleType
+  override def foldable: Boolean = children.forall(_.foldable)
+  override def nullSafeEval(u: Any, en: Any, l: Any, f: Any): Any =
+    Fuzz.compositeFuzzUB(u.asInstanceOf[ArrayData], en.asInstanceOf[ArrayData],
+      l.asInstanceOf[ArrayData], f.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (u, en, l, f) =>
+      s"graft.functions.Fuzz.compositeFuzzUB($u, $en, $l, $f)")
+  override def prettyName: String = "fuzz_composite_ub"
+  override protected def withNewChildrenInternal(
+      f1: Expression, f2: Expression, f3: Expression, f4: Expression): Expression =
+    copy(f1, f2, f3, f4)
+}
+
 abstract class UnaryStringStringExpression extends UnaryExpression with ExpectsInputTypes {
   override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = StringType

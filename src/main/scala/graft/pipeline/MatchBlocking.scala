@@ -327,18 +327,8 @@ object MatchBlocking {
       }
     val u = MatchPipeline.prepareUsernames(users)
     val e = MatchPipeline.prepareEmployees(employees)
-    val scored = candSpread
-      .join(u, "username")
-      .join(broadcast(e), "emp_id")
-      .withColumn("score",
-        MatchScore.scoreFromInvariants(
-          col("u_norm"), col("u_part1"), col("u_part2"), col("u_sdx"), col("u_mp"),
-          col("u_initial"), col("u_dot2_initial"),
-          col("e_first"), col("e_last"), col("e_full"),
-          col("e_sdx_first"), col("e_sdx_last"), col("e_mp_first"), col("e_mp_last"),
-          col("e_first_initial"), col("e_patterns"),
-          fToks = col("e_first_toks"), lToks = col("e_last_toks"),
-          enToks = col("e_full_toks")))
+    val scored = MatchScore.withScore(
+        candSpread.join(u, "username").join(broadcast(e), "emp_id"), "e", Some(threshold))
       .select("username", "emp_id", "employee_name", "score")
     // same three-key total order as MatchPipeline.rankedTopKOf (score desc,
     // emp_id asc, employee_name asc — the shared bounded-heap aggregate):
@@ -346,15 +336,7 @@ object MatchBlocking {
     // total order — the reference roster reuses EMP_IDs, so a same-id score
     // tie at the top-k boundary would otherwise keep a nondeterministic
     // name on this path while the exact path is pinned.
-    val qualifies = col("score") >= threshold
-    val ranked = MatchPipeline.rankedTopKOf(scored, topK)
-      .filter(qualifies || col("rn") === 1)
-      .select(
-        col("username"),
-        when(qualifies, col("emp_id")).otherwise("N/A").as("emp_id"),
-        when(qualifies, col("employee_name")).otherwise("USER NOT FOUND").as("emp_name"),
-        when(qualifies, format_string("%.2f%%", col("score"))).otherwise("0.00%").as("confidence_score"),
-        when(qualifies, MatchPipeline.rankLabel(col("rank"))).otherwise("USER NOT FOUND").as("match_type"))
+    val ranked = MatchPipeline.outputRows(MatchPipeline.rankedTopKOf(scored, topK), threshold)
     // usernames with zero candidates -> sentinel (cheap: the anti join probes
     // the key-join output, which contains no similarity kernels)
     val noCandidates = users

@@ -10,24 +10,40 @@ import graft.scoring.MatchScore
  * query, re-expressing the reference's POST-/ pipeline
  * (/root/reference/main.py:136-221) as one declarative Spark plan:
  *
- *   usernames ⟕ [similarity cross join] broadcast(employees)
- *     -> score (MatchScore expression tree)
- *     -> per-username top-k (row_number window, k=4) with threshold >= 50
+ *   usernames ⟕ [similarity cross join] broadcast(distinct employee names)
+ *     -> score (MatchScore expression tree, thresholded: see below)
+ *     -> fan back out to the employees of each name (broadcast hash join)
+ *     -> per-username top-k (bounded-heap `topk_match` aggregate, k=4)
  *     -> dense-rank confidence labels (ties share a rank — golden semantics
  *        pinned by the reference's assets/example.png)
- *     -> NOT-FOUND sentinels derived from the rn=1 row in the same pass
+ *     -> rows scoring >= 50, and NOT-FOUND sentinels derived from the rn=1
+ *        row in the same pass
+ *
+ * Threshold prune (filter, then verify): the output keeps only rows
+ * scoring >= the threshold, plus a sentinel built from constants for a
+ * username with none. So [[matchOutput]] scores its pairs through
+ * [[MatchScore.withScore]] with the threshold: a pair whose upper bound
+ * (character-histogram caps on the fuzzy terms plus the exact bonuses) is
+ * below the threshold keeps that bound as its score and never runs the
+ * fuzzy kernels. Its exact score is <= the bound, so it was below the
+ * threshold anyway; it still sorts after every qualifying row, so the top-k
+ * heap, the dense ranks of qualifying rows and the rn=1 sentinel come out
+ * exactly as without the prune. About 70% of pairs are pruned on the
+ * reference and the wide synthetic inputs. [[scoredPairs]] stays exact.
  *
  * Scale design (100 TB usernames, roster-sized employees):
  *  - the employee side is hoisted+broadcast, so the cross join is a
  *    BroadcastNestedLoopJoin with NO shuffle of the big side;
- *  - per-username and per-employee invariants (phonetic codes, splits) are
- *    computed O(U)+O(E) times before the join, not O(U*E) times inside it;
- *  - the only shuffle is the hash-partition on `username` for the window;
- *    both windows (top-k and dense_rank) share one partitioning, and
- *    Spark's WindowGroupLimit pushes the rank<=k limit below the shuffle,
- *    so each map task emits at most k rows per username before exchange.
- *  - deterministic tiebreak (score desc, emp_id asc) — the reference's
- *    pandas unstable sort makes ties unspecified (SURVEY.md §7.4.1).
+ *  - per-username and per-employee invariants (phonetic codes, splits,
+ *    bound profiles) are computed O(U)+O(E) times before the join, not
+ *    O(U*E) times inside it;
+ *  - past the size-aware spread of small inputs (see [[scoredPairs]]), the
+ *    username side is shuffled only by the top-k aggregate's hash
+ *    partitioning on `username`; partial aggregation bounds that at k rows
+ *    per username per map task, and the dense-rank window reuses it;
+ *  - deterministic tiebreak (score desc, emp_id asc, employee_name asc) —
+ *    the reference's pandas unstable sort makes ties unspecified
+ *    (SURVEY.md §7.4.1).
  */
 object MatchPipeline {
 
@@ -44,14 +60,19 @@ object MatchPipeline {
 
   /** Usernames with hoisted scoring invariants. */
   def prepareUsernames(usernames: DataFrame): DataFrame =
-    MatchScore.usernameInvariants(col("username")).foldLeft(
-      usernames.select(col("username").cast("string").as("username"))
-    ) { case (df, (name, c)) => df.withColumn(name, c) }
+    usernames.select(col("username").cast("string").as("username"))
+      .select(col("username") +: invariantCols(MatchScore.usernameInvariants(col("username"))): _*)
 
   /** Canonical employees with hoisted scoring invariants. */
   def prepareEmployees(employees: DataFrame): DataFrame =
-    MatchScore.employeeInvariants(col("first_name"), col("last_name"), col("employee_name"))
-      .foldLeft(employees) { case (df, (name, c)) => df.withColumn(name, c) }
+    employees.select(col("*") +: invariantCols(MatchScore.employeeInvariants(
+      col("first_name"), col("last_name"), col("employee_name"))): _*)
+
+  /** Named invariant columns for ONE select: a withColumn per invariant
+    * re-analyzes the whole growing plan each time, analysis that every
+    * matchOutput call (every served batch) pays before any task runs. */
+  private def invariantCols(inv: Map[String, Column]): Seq[Column] =
+    inv.toSeq.map { case (name, c) => c.as(name) }
 
   /** Scored candidate pairs: every (username, employee) with its score.
     *
@@ -61,8 +82,8 @@ object MatchPipeline {
     * fine compute slices across cores: without it, AQE sees a few KB of
     * shuffled usernames and coalesces the exchange down to one partition,
     * serializing the entire O(U*E) scoring loop onto one thread (measured
-    * 48s -> ~2s at sf0.1 on local[32]). The shuffled rows are tiny (bare
-    * username strings; invariants are derived after the exchange), so the
+    * 48s -> ~2s at sf0.1 on local[32]). The shuffled rows are small (a
+    * username and its hoisted invariants, a few hundred bytes), so the
     * repartition costs nothing relative to the scoring it spreads — on a
     * SMALL input. A 100 TB username table arriving already spread over
     * thousands of scan/shuffle partitions needs no rebalancing, so the
@@ -73,13 +94,17 @@ object MatchPipeline {
     * explicit numPartitions repartition is never AQE-coalesced, so the
     * small-input fix cannot regress. */
   def scoredPairs(usernames: DataFrame, employees: DataFrame): DataFrame =
-    scoredPairsCapped(usernames, employees, None)
+    scoredPairsCapped(usernames, employees, None, None)
 
   /** [[scoredPairs]] with an optional per-name-tuple cap on the fan-out
-    * roster — the private form [[rankedTopK]] consumes (see the FAN-OUT
-    * PRUNE comment inside). `fanoutTopK = None` is the full pair relation. */
+    * roster and an optional score threshold — the private form
+    * [[rankedTopK]] consumes (see the FAN-OUT PRUNE comment inside, and
+    * [[MatchScore.withScore]] for the threshold prune: pairs whose bound is
+    * below the threshold carry that bound, not their exact score).
+    * `fanoutTopK = None, threshold = None` is the full, exact pair relation. */
   private def scoredPairsCapped(usernames: DataFrame, employees: DataFrame,
-                                fanoutTopK: Option[Int]): DataFrame = {
+                                fanoutTopK: Option[Int],
+                                threshold: Option[Double]): DataFrame = {
     val spark = usernames.sparkSession
     val parallelism = spark.sparkContext.defaultParallelism
     // static planned partition count: queryExecution.sparkPlan is the
@@ -107,10 +132,19 @@ object MatchPipeline {
     // 4 waves of fine-grained tasks: with one task per core a single
     // straggler (GC pause, CPU steal) stretches the whole stage; finer
     // slices rebalance.
-    val stream =
-      if (planned >= 2 * parallelism && !aqeCollapsible) usernames
-      else usernames.repartition(4 * parallelism)
-    val u = prepareUsernames(stream)
+    //
+    // The username invariants are derived BEFORE that exchange. Whole-stage
+    // codegen defers a deterministic projection's outputs to their first
+    // use, and the nested-loop join first uses its stream side inside its
+    // loop over the broadcast roster: derived in the join's stage, every
+    // username invariant (metaphone, soundex, splits, bound profile) runs
+    // once per PAIR (about a quarter of the wide scoring stage's samples
+    // in a JFR profile). Derived before the exchange, the shuffle writes
+    // them once per username and the join reads plain fields. An input
+    // that skips the exchange still derives them per pair.
+    val u =
+      if (planned >= 2 * parallelism && !aqeCollapsible) prepareUsernames(usernames)
+      else prepareUsernames(usernames).repartition(4 * parallelism)
     val e = prepareEmployees(employees)
     // DISTINCT-NAME MEMOIZATION (r20, guide §1.2 "the distributed
     // algorithm"): the score is a pure function of (username, e_first,
@@ -128,22 +162,12 @@ object MatchPipeline {
     // `e`'s, so the fan-out join is not an ambiguous self join.
     val eKeys = e.select(col("e_first").as("n_first"), col("e_last").as("n_last"),
       col("e_full").as("n_full")).distinct()
-    // invariants recomputed on the distinct tuples: lower/trim are
-    // idempotent, so codes from the re-normalized strings are identical
-    val eNames = MatchScore.employeeInvariants(
-        col("n_first"), col("n_last"), col("n_full"))
-      .foldLeft(eKeys) { case (df, (name, c)) =>
-        df.withColumn(name.replaceFirst("^e_", "n_"), c) }
-    val scoredNames = u.crossJoin(broadcast(eNames))
-      .withColumn("score",
-        MatchScore.scoreFromInvariants(
-          col("u_norm"), col("u_part1"), col("u_part2"), col("u_sdx"), col("u_mp"),
-          col("u_initial"), col("u_dot2_initial"),
-          col("n_first"), col("n_last"), col("n_full"),
-          col("n_sdx_first"), col("n_sdx_last"), col("n_mp_first"), col("n_mp_last"),
-          col("n_first_initial"), col("n_patterns"),
-          fToks = col("n_first_toks"), lToks = col("n_last_toks"),
-          enToks = col("n_full_toks")))
+    // invariants recomputed on the distinct tuples (n_first, n_last and
+    // n_full among them, re-normalized: lower/trim are idempotent)
+    val eNames = eKeys.select(MatchScore.employeeInvariants(
+        col("n_first"), col("n_last"), col("n_full")).toSeq
+      .map { case (name, c) => c.as(name.replaceFirst("^e_", "n_")) }: _*)
+    val scoredNames = MatchScore.withScore(u.crossJoin(broadcast(eNames)), "n", threshold)
       .select(col("username"), col("u_norm"), col("u_part1"), col("u_part2"),
         col("u_sdx"), col("u_mp"), col("u_initial"), col("u_dot2_initial"),
         col("n_first"), col("n_last"), col("n_full"), col("score"))
@@ -178,15 +202,18 @@ object MatchPipeline {
       .drop("n_first", "n_last", "n_full")
   }
 
-  /** Top-k rows per username (NO threshold), dense-rank labeled. Keeping the
-    * sub-threshold rows lets [[matchOutput]] derive NOT-FOUND sentinels from
-    * the rn=1 row in the same pass instead of re-running the scored cross
-    * join for an anti join (which doubled the pipeline's cost — Spark does
-    * not de-duplicate a common subplan across union/join branches).
-    * Sub-threshold rows sort after qualifying ones, so their presence cannot
-    * change a qualifying row's dense rank. */
-  private def rankedTopK(usernames: DataFrame, employees: DataFrame, topK: Int): DataFrame =
-    rankedTopKOf(scoredPairsCapped(usernames, employees, Some(topK)), topK)
+  /** Top-k rows per username (sub-threshold rows NOT filtered), dense-rank
+    * labeled. Keeping the sub-threshold rows lets [[matchOutput]] derive
+    * NOT-FOUND sentinels from the rn=1 row in the same pass instead of
+    * re-running the scored cross join for an anti join (which doubled the
+    * pipeline's cost — Spark does not de-duplicate a common subplan across
+    * union/join branches). Sub-threshold rows sort after qualifying ones,
+    * so their presence cannot change a qualifying row's dense rank — which
+    * is also why their scores may be the threshold prune's bounds rather
+    * than exact scores. */
+  private def rankedTopK(usernames: DataFrame, employees: DataFrame, topK: Int,
+                         threshold: Double): DataFrame =
+    rankedTopKOf(scoredPairsCapped(usernames, employees, Some(topK), Some(threshold)), topK)
 
   /** Per-username top-k of a scored (username, emp_id, employee_name,
     * score) frame via the bounded-heap aggregate [[graft.functions.topk_match]]
@@ -207,7 +234,7 @@ object MatchPipeline {
     * rank/label (golden tie semantics from assets/example.png). The rank
     * window runs over <= k rows per username on the aggregate's own
     * username partitioning — no additional exchange. */
-  private[pipeline] def rankedTopKOf(scored: DataFrame, topK: Int): DataFrame = {
+  private[graft] def rankedTopKOf(scored: DataFrame, topK: Int): DataFrame = {
     val byUserScore = Window.partitionBy(col("username")).orderBy(col("score").desc)
     scored
       .groupBy(col("username"))
@@ -221,6 +248,23 @@ object MatchPipeline {
         (col("__pos") + 1).cast("int").as("rn"))
       .withColumn("rank", dense_rank().over(byUserScore))
       .withColumn("match_type", rankLabel(col("rank")))
+  }
+
+  /** The output projection of a [[rankedTopKOf]] frame: its rows scoring
+    * >= `threshold`, and a USER NOT FOUND sentinel, built from constants
+    * only, for each username whose BEST row (rn = 1) is below it — a
+    * username with no qualifying match gets its sentinel in the same pass.
+    * Shared by [[matchOutput]] and [[MatchBlocking.matchOutput]]. */
+  private[graft] def outputRows(ranked: DataFrame, threshold: Double): DataFrame = {
+    val qualifies = col("score") >= threshold
+    ranked
+      .filter(qualifies || col("rn") === 1)
+      .select(
+        col("username"),
+        when(qualifies, col("emp_id")).otherwise("N/A").as("emp_id"),
+        when(qualifies, col("employee_name")).otherwise("USER NOT FOUND").as("emp_name"),
+        when(qualifies, format_string("%.2f%%", col("score"))).otherwise("0.00%").as("confidence_score"),
+        when(qualifies, col("match_type")).otherwise("USER NOT FOUND").as("match_type"))
   }
 
   /**
@@ -244,18 +288,7 @@ object MatchPipeline {
                   topK: Int = TopK, threshold: Double = ScoreThreshold): DataFrame = {
     val users = usernames
       .select(col("username").cast("string").as("username")).distinct()
-    // Single pass over the scored top-k: a username whose BEST candidate
-    // (rn=1) is below threshold has no qualifying match at all, so its rn=1
-    // row becomes the USER NOT FOUND sentinel in the same projection.
-    val qualifies = col("score") >= threshold
-    val fromPairs = rankedTopK(users, employees, topK)
-      .filter(qualifies || col("rn") === 1)
-      .select(
-        col("username"),
-        when(qualifies, col("emp_id")).otherwise("N/A").as("emp_id"),
-        when(qualifies, col("employee_name")).otherwise("USER NOT FOUND").as("emp_name"),
-        when(qualifies, format_string("%.2f%%", col("score"))).otherwise("0.00%").as("confidence_score"),
-        when(qualifies, col("match_type")).otherwise("USER NOT FOUND").as("match_type"))
+    val fromPairs = outputRows(rankedTopK(users, employees, topK, threshold), threshold)
     // Empty-roster edge: the cross join then emits NOTHING, so every
     // username needs a sentinel. The anti-join probe is against roster
     // .limit(1) — O(1), never the scored pairs.

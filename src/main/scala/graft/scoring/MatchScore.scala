@@ -1,6 +1,6 @@
 package graft.scoring
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions._
 
@@ -23,6 +23,19 @@ import graft.functions._
  * reference's early `return` — in both interpreted and whole-stage-codegen
  * paths — and the whole score inlines into the cross-join stage with no UDF
  * serialization boundary.
+ *
+ * Thresholded form ([[withScore]] with a threshold): a second branch sits
+ * between the pattern short-circuit and the kernels,
+ * `when(isPattern, 100).when(ub < t, ub).otherwise(<exact score>)`. `ub`
+ * ([[compositeUpperBound]]) is the composite with each fuzzy term replaced
+ * by an integer upper bound from character histograms — an LCS matches at
+ * most min(count_a(c), count_b(c)) copies of each char, so ratio <=
+ * rint(200*cap/(|a|+|b|)), partial_ratio <= rint(200*B/(m+B)) with
+ * B = min(m, cap), and token_set <= 100 when the token sets may share a
+ * token, else the ratio bound of the space-joined tokens — summed with the
+ * same weights and left-to-right adds as the exact composite, plus the same
+ * exact bonuses. Rounding is monotone, so ub >= the exact score bit for
+ * bit, and a pruned pair is below the threshold with or without the prune.
  *
  * Documented divergences (SURVEY.md §7.4): the reference IndexErrors on empty
  * username/first_name (main.py:69) and on `"name."` (main.py:73); we guard
@@ -47,7 +60,8 @@ object MatchScore {
       "u_dot2_initial" -> {
         val dotParts = split(u, "\\.")
         when(size(dotParts) > 1, substring(try_element_at(dotParts, lit(2)), 1, 1)).otherwise(lit(""))
-      }
+      },
+      "u_prof" -> fuzz_bound_profile(u)
     )
   }
 
@@ -83,13 +97,24 @@ object MatchScore {
       // bit-identical (the token-set merge sees the same arrays).
       "e_first_toks" -> fuzz_preproc_tokens(f),
       "e_last_toks" -> fuzz_preproc_tokens(l),
-      "e_full_toks" -> fuzz_preproc_tokens(en)
+      "e_full_toks" -> fuzz_preproc_tokens(en),
+      // bound profiles (character histograms + token hashes) read by the
+      // threshold prune in withScore, one per roster row
+      "e_first_prof" -> fuzz_bound_profile(f),
+      "e_last_prof" -> fuzz_bound_profile(l),
+      "e_full_prof" -> fuzz_bound_profile(en)
     )
   }
 
   /**
    * Score from the hoisted invariant columns. `u_*` columns come from
    * [[usernameInvariants]], `e_*` from [[employeeInvariants]].
+   *
+   * `bound = Some((ub, t))` adds the threshold prune between the pattern
+   * short-circuit and the kernels: a pair whose `ub` (an upper bound on its
+   * composite, [[compositeUpperBound]]) is below `t` scores `ub` and never
+   * reaches the fuzzy kernels. See [[withScore]] for why that is exact for
+   * every consumer that keeps only rows scoring >= `t`.
    */
   def scoreFromInvariants(
       u: Column, uPart1: Column, uPart2: Column, uSdx: Column, uMp: Column,
@@ -102,13 +127,10 @@ object MatchScore {
       // e_full_toks from employeeInvariants). The defaults recompute them
       // inline — bit-identical, just without the per-pair hoist — so
       // convenience callers need not thread the columns.
-      fToks: Column = null, lToks: Column = null, enToks: Column = null): Column = {
+      fToks: Column = null, lToks: Column = null, enToks: Column = null,
+      bound: Option[(Column, Double)] = None): Column = {
 
     val isPattern = array_contains(ePatterns, u)
-
-    val splitBonus = when(
-      (uPart1 === f && uPart2 === l) || (uPart2 === f && uPart1 === l), lit(10)
-    ).otherwise(lit(0))
 
     // dead heuristic in the reference (main.py:54): 0 either way; optional
     // resurrected version behind the flag
@@ -117,31 +139,98 @@ object MatchScore {
         when(u.contains(lower(trim(empId.cast("string")))), lit(10)).otherwise(lit(0))
       else lit(0)
 
-    val initialBonus =
-      when(length(u) > 0 && length(f) > 0 && uInitial === eFirstInitial, lit(5)).otherwise(lit(0)) +
-      when(uDot2Initial =!= "" && uDot2Initial === eFirstInitial, lit(5)).otherwise(lit(0))
-
     // the five fuzzy terms are fused into one codegen kernel call
     // (Fuzz.compositeFuzzPre): bit-identical weighted sum — including null
     // propagation (each token array is null exactly when its source string
     // is) — with the username-side token preprocessing memoized per thread
     // and the employee-side token preprocessing hoisted to the broadcast
     // side instead of re-derived per pair
-    val composite =
+    val composite = plusBonuses(
       fuzz_composite_pre(u, en,
         if (fToks == null) fuzz_preproc_tokens(f) else fToks,
         if (lToks == null) fuzz_preproc_tokens(l) else lToks,
-        if (enToks == null) fuzz_preproc_tokens(en) else enToks) +
+        if (enToks == null) fuzz_preproc_tokens(en) else enToks),
+      u, uPart1, uPart2, uSdx, uMp, uInitial, uDot2Initial, f, l,
+      eSdxFirst, eSdxLast, eMpFirst, eMpLast, eFirstInitial, numberBonus)
+
+    // coalesce guards NULL inputs: a null composite would otherwise slip
+    // through least() (which skips nulls) and score 100. Null/absent names
+    // score 0 — same outcome as the reference's unmatchable rows.
+    val head = when(isPattern, lit(100.0))
+    bound.fold(head) { case (ub, t) => head.when(ub < t, ub) }
+      .otherwise(least(coalesce(composite, lit(0.0)), lit(100.0)))
+  }
+
+  /** The uncapped composite: the five fuzzy terms `fuzz` plus the phonetic,
+    * split, initial and emp-id bonuses, added left to right. Exact score and
+    * bound both go through here, so they differ only in `fuzz`: every add is
+    * monotone, hence fuzz <= fuzz' gives composite <= composite'. */
+  private def plusBonuses(fuzz: Column,
+      u: Column, uPart1: Column, uPart2: Column, uSdx: Column, uMp: Column,
+      uInitial: Column, uDot2Initial: Column, f: Column, l: Column,
+      eSdxFirst: Column, eSdxLast: Column, eMpFirst: Column, eMpLast: Column,
+      eFirstInitial: Column, numberBonus: Column): Column = {
+    val splitBonus = when(
+      (uPart1 === f && uPart2 === l) || (uPart2 === f && uPart1 === l), lit(10)
+    ).otherwise(lit(0))
+    val initialBonus =
+      when(length(u) > 0 && length(f) > 0 && uInitial === eFirstInitial, lit(5)).otherwise(lit(0)) +
+      when(uDot2Initial =!= "" && uDot2Initial === eFirstInitial, lit(5)).otherwise(lit(0))
+    fuzz +
       (uSdx === eSdxLast).cast("int") * lit(6) +
       (uMp === eMpLast).cast("int") * lit(7) +
       (uSdx === eSdxFirst).cast("int") * lit(3) +
       (uMp === eMpFirst).cast("int") * lit(3) +
       splitBonus + initialBonus + numberBonus
+  }
 
-    // coalesce guards NULL inputs: a null composite would otherwise slip
-    // through least() (which skips nulls) and score 100. Null/absent names
-    // score 0 — same outcome as the reference's unmatchable rows.
-    when(isPattern, lit(100.0))
-      .otherwise(least(coalesce(composite, lit(0.0)), lit(100.0)))
+  /** Upper bound on the uncapped composite of a pair frame laid out as in
+    * [[withScore]]: the composite with [[fuzz_composite_pre]] replaced by
+    * [[fuzz_composite_ub]] over the hoisted bound profiles
+    * (`Fuzz.compositeFuzzUB`: integer bounds from character histograms,
+    * summed with the kernel's weights and order) and the same exact
+    * bonuses. It is >= the composite, so >= the score, on every pair, and
+    * null exactly where the composite is. */
+  def compositeUpperBound(side: String): Column = {
+    def e(n: String) = col(s"${side}_$n")
+    plusBonuses(
+      fuzz_composite_ub(u("prof"), e("full_prof"), e("last_prof"), e("first_prof")),
+      u("norm"), u("part1"), u("part2"), u("sdx"), u("mp"), u("initial"), u("dot2_initial"),
+      e("first"), e("last"), e("sdx_first"), e("sdx_last"), e("mp_first"), e("mp_last"),
+      e("first_initial"), lit(0))
+  }
+
+  private def u(name: String): Column = col(s"u_$name")
+
+  /**
+   * Adds `score` to a frame of (username, employee) pairs carrying the
+   * [[usernameInvariants]] columns and the [[employeeInvariants]] columns
+   * with their `e` prefix replaced by `side` — the one scoring form of the
+   * exact and the blocked match paths.
+   *
+   * With `threshold = Some(t)` the score is thresholded (filter, then
+   * verify): the bound column is projected once per pair, and a pair whose
+   * bound is below `t` scores its bound instead of running the fuzzy
+   * kernels. Its exact score is <= its bound < t, so the pair is below the
+   * threshold either way, and it still sorts after every pair scoring
+   * >= t. A consumer that keeps only rows scoring >= t, plus a constant
+   * sentinel for a username without one, therefore sees identical output;
+   * top-k heaps, dense ranks and the rn = 1 sentinel all stay exact. Pairs
+   * scoring >= t, and every pair when `threshold = None`, carry the exact
+   * score bit for bit.
+   */
+  def withScore(pairs: DataFrame, side: String, threshold: Option[Double] = None): DataFrame = {
+    def e(n: String) = col(s"${side}_$n")
+    // the bound gets a column of its own: inside the CaseWhen it appears in
+    // a condition and a value, and would be evaluated twice per pruned pair
+    threshold.fold(pairs)(_ => pairs.withColumn("__ub", compositeUpperBound(side)))
+      .withColumn("score", scoreFromInvariants(
+        u("norm"), u("part1"), u("part2"), u("sdx"), u("mp"), u("initial"), u("dot2_initial"),
+        e("first"), e("last"), e("full"),
+        e("sdx_first"), e("sdx_last"), e("mp_first"), e("mp_last"),
+        e("first_initial"), e("patterns"),
+        fToks = e("first_toks"), lToks = e("last_toks"), enToks = e("full_toks"),
+        bound = threshold.map(t => (col("__ub"), t))))
+      .drop("__ub")
   }
 }

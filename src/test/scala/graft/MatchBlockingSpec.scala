@@ -39,6 +39,24 @@ class MatchBlockingSpec extends AnyFunSuite {
       s"pattern-tier pairs lost by blocking: ${exactPattern -- blocked}")
   }
 
+  test("every blocked output row carries its pair's exact fixture score") {
+    // the blocked path scores its candidates through the same thresholded
+    // form as the exact path (MatchScore.withScore): rows that reach the
+    // output are at or above the threshold, where the prune never fires
+    val fx = spark.read.option("header", "true")
+      .schema("username STRING, emp_id STRING, first_name STRING, last_name STRING, " +
+        "employee_name STRING, score DOUBLE, score_fmt STRING")
+      .csv("fixtures/match_golden.csv")
+      .select(col("username"), col("emp_id"), col("employee_name").as("emp_name"),
+        concat(col("score_fmt"), lit("%")).as("fixture_score"))
+    val found = MatchBlocking.matchOutput(usernames, employees)
+      .filter(col("match_type") =!= "USER NOT FOUND")
+    val joined = found.join(fx, Seq("username", "emp_id", "emp_name"), "left")
+    assert(joined.count() === found.count())
+    val bad = joined.filter(!(col("confidence_score") <=> col("fixture_score")))
+    assert(bad.isEmpty, bad.take(5).mkString("; "))
+  }
+
   test("top-1 agreement vs the exact path on the degenerate synthetic roster (sf0.01)") {
     // The reference-workload recall above exercises a FAVORABLE roster (154
     // distinct names). The sf0.01 synthetic inputs are the adversarial case

@@ -98,6 +98,24 @@ class PlanShapeSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.shuffle.partitions", prevConf)
   }
 
+  test("threshold prune: matchOutput keeps its 6 exchanges, 3 broadcasts, 2 nested-loop joins") {
+    // the bound is one more projection inside the scoring stage: no anti
+    // join, exchange or broadcast is added (counts taken from the plan
+    // before the prune, AQE off so every exchange is visible)
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    val employees = graft.schema.EmployeeNormalizer.normalize(spark.read.option("header", "true")
+      .csv(s"${SparkTestBase.ReferenceDir}/employee.csv"))
+    val usernames = spark.read.option("header", "true")
+      .csv(s"${SparkTestBase.ReferenceDir}/usernames.csv").select("username")
+    val p = preparedPlan(graft.pipeline.MatchPipeline.matchOutput(usernames, employees))
+    assert(p.collect { case e: ShuffleExchangeExec => e }.size === 6, p)
+    assert(p.collect { case e: BroadcastExchangeExec => e }.size === 3, p)
+    // the scoring cross join and the empty-roster anti join
+    assert(p.collect { case j: BroadcastNestedLoopJoinExec => j }.size === 2, p)
+    assert(p.toString.contains("fuzz_composite_ub"), p)
+  }
+
   test("per-group top-k installs the pre-shuffle WindowGroupLimit") {
     val p = plan(SparkEntry.queries("q4_topk_pergroup")(spark, sf))
     assert(p.contains("WindowGroupLimit"), p)
