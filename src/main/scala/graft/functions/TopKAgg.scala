@@ -189,7 +189,7 @@ final class MatchTopKHeap(val k: Int) {
  * The match pipeline's per-username top-k as a bounded-heap aggregate:
  * `topk_match(score, emp_id, employee_name, k)` keeps the k first rows of
  * the window order (score DESC, emp_id ASC, employee_name ASC — the
- * [[graft.pipeline.MatchPipeline.rankedTopK]] total order) and returns
+ * [[graft.pipeline.MatchPipeline.rankedTopKOf]] total order) and returns
  * them best-first as `array<struct<score,emp_id,employee_name>>`.
  *
  * Replaces Sort + WindowGroupLimit + Window(row_number): the sort of the

@@ -277,12 +277,12 @@ object MatchBlocking {
     // group per distinct username value
     val users = usernames
       .select(col("username").cast("string").as("username")).distinct()
-    // the candidate set feeds BOTH branches below (scoring join + the
-    // zero-candidate sentinel anti join), and Spark reuses no common
-    // subplan across branches — checkpoint the narrow (username, emp_id)
-    // pairs once so the key-explode join DAG runs once, not twice. This
-    // makes matchOutput eager at the candidate stage, which is the right
-    // trade for the scale path this operator exists for.
+    // checkpoint the narrow (username, emp_id) pairs once: one eager job
+    // runs the key-explode join DAG and counts its rows for the spread
+    // sizing below, and the scoring join reads the checkpointed rows
+    // instead of running that DAG again. This makes matchOutput eager at
+    // the candidate stage, which is the right trade for the scale path
+    // this operator exists for.
     // The candidate COUNT (consumed by the spread sizing below) rides the
     // checkpoint job as a string-named observed metric (the Dedup.clusters
     // convergence-probe pattern, r21 guide §1.2): the eager localCheckpoint
@@ -336,17 +336,9 @@ object MatchBlocking {
     // total order — the reference roster reuses EMP_IDs, so a same-id score
     // tie at the top-k boundary would otherwise keep a nondeterministic
     // name on this path while the exact path is pinned.
-    val ranked = MatchPipeline.outputRows(MatchPipeline.rankedTopKOf(scored, topK), threshold)
-    // usernames with zero candidates -> sentinel (cheap: the anti join probes
-    // the key-join output, which contains no similarity kernels)
-    val noCandidates = users
-      .join(cand.select("username"), Seq("username"), "left_anti")
-      .select(
-        col("username"),
-        lit("N/A").as("emp_id"),
-        lit("USER NOT FOUND").as("emp_name"),
-        lit("0.00%").as("confidence_score"),
-        lit("USER NOT FOUND").as("match_type"))
-    ranked.unionByName(noCandidates)
+    // a username with zero candidates keeps only its presence row, which
+    // becomes its sentinel
+    MatchPipeline.outputRows(
+      MatchPipeline.rankedTopKOf(MatchPipeline.withPresenceRows(scored, users), topK), threshold)
   }
 }

@@ -10,26 +10,28 @@ import graft.scoring.MatchScore
  * query, re-expressing the reference's POST-/ pipeline
  * (/root/reference/main.py:136-221) as one declarative Spark plan:
  *
- *   usernames ⟕ [similarity cross join] broadcast(distinct employee names)
+ *   usernames ⟕ [similarity cross join] broadcast(distinct employee names,
+ *                                                  each with its employees)
  *     -> score (MatchScore expression tree, thresholded: see below)
- *     -> fan back out to the employees of each name (broadcast hash join)
+ *     -> explode each name's employees, only for pairs scoring >= 50
+ *     -> ∪ one presence row per username (null emp_id and score)
  *     -> per-username top-k (bounded-heap `topk_match` aggregate, k=4)
  *     -> dense-rank confidence labels (ties share a rank — golden semantics
  *        pinned by the reference's assets/example.png)
  *     -> rows scoring >= 50, and NOT-FOUND sentinels derived from the rn=1
- *        row in the same pass
+ *        row in the same pass (a presence row at rn=1: no qualifying pair)
  *
  * Threshold prune (filter, then verify): the output keeps only rows
  * scoring >= the threshold, plus a sentinel built from constants for a
  * username with none. So [[matchOutput]] scores its pairs through
  * [[MatchScore.withScore]] with the threshold: a pair whose upper bound
  * (character-histogram caps on the fuzzy terms plus the exact bonuses) is
- * below the threshold keeps that bound as its score and never runs the
- * fuzzy kernels. Its exact score is <= the bound, so it was below the
- * threshold anyway; it still sorts after every qualifying row, so the top-k
- * heap, the dense ranks of qualifying rows and the rn=1 sentinel come out
- * exactly as without the prune. About 70% of pairs are pruned on the
- * reference and the wide synthetic inputs. [[scoredPairs]] stays exact.
+ * below the threshold never runs the fuzzy kernels, and every pair below
+ * the threshold (about 95% on the wide synthetic input) is dropped at the
+ * fan-out, before the top-k heap. Qualifying rows sort before every
+ * dropped one, so the top-k heap and the dense ranks of qualifying rows
+ * come out exactly as without the prune, and the presence rows supply the
+ * sentinels the dropped rows would have. [[scoredPairs]] stays exact.
  *
  * Scale design (100 TB usernames, roster-sized employees):
  *  - the employee side is hoisted+broadcast, so the cross join is a
@@ -97,11 +99,12 @@ object MatchPipeline {
     scoredPairsCapped(usernames, employees, None, None)
 
   /** [[scoredPairs]] with an optional per-name-tuple cap on the fan-out
-    * roster and an optional score threshold — the private form
-    * [[rankedTopK]] consumes (see the FAN-OUT PRUNE comment inside, and
-    * [[MatchScore.withScore]] for the threshold prune: pairs whose bound is
-    * below the threshold carry that bound, not their exact score).
-    * `fanoutTopK = None, threshold = None` is the full, exact pair relation. */
+    * roster and an optional score threshold — the form [[matchOutput]]
+    * consumes (see the FAN-OUT CAP and SCORE-GATED FAN-OUT comments inside,
+    * and [[MatchScore.withScore]] for the threshold prune). With a
+    * threshold, only pairs scoring >= it are emitted, each with its exact
+    * score. `fanoutTopK = None, threshold = None` is the full, exact pair
+    * relation: (username, emp_id, employee_name, score). */
   private def scoredPairsCapped(usernames: DataFrame, employees: DataFrame,
                                 fanoutTopK: Option[Int],
                                 threshold: Option[Double]): DataFrame = {
@@ -145,75 +148,51 @@ object MatchPipeline {
     val u =
       if (planned >= 2 * parallelism && !aqeCollapsible) prepareUsernames(usernames)
       else prepareUsernames(usernames).repartition(4 * parallelism)
-    val e = prepareEmployees(employees)
     // DISTINCT-NAME MEMOIZATION (r20, guide §1.2 "the distributed
     // algorithm"): the score is a pure function of (username, e_first,
     // e_last, e_full) — emp_id never enters it — so the expensive kernels
-    // run once per (username, DISTINCT name tuple) and a broadcast hash
-    // join fans the scored rows back out to that name's employees. On the
-    // bench's 64-name/20k-employee roster this is ~300x fewer kernel
-    // evaluations (measured nm_match_topk 30.8 -> see OPTIMIZATION_r20.md);
-    // on a high-cardinality roster (distinct ~ |E|) the overhead is one
-    // roster-sized distinct plus one extra broadcast probe per pair — noise
-    // next to the kernels. Scale shape is unchanged: the username side
-    // still crosses ONE BroadcastNestedLoopJoin and one BroadcastHashJoin,
-    // never an exchange; both broadcast builds are roster-bounded.
-    // n_* aliases keep the distinct side's attribute ids disjoint from
-    // `e`'s, so the fan-out join is not an ambiguous self join.
-    val eKeys = e.select(col("e_first").as("n_first"), col("e_last").as("n_last"),
-      col("e_full").as("n_full")).distinct()
+    // run once per (username, DISTINCT name tuple). One groupBy over the
+    // roster yields those tuples, each carrying its employees as `n_emps`:
+    // (emp_id, employee_name) structs sorted ascending, nulls first (the
+    // top-k tiebreak order). On the bench's 64-name/20k-employee roster
+    // this is ~300x fewer kernel evaluations (OPTIMIZATION_r20.md). The
+    // username side crosses ONE BroadcastNestedLoopJoin and no exchange;
+    // the broadcast build is roster-bounded. Grouping keeps null name
+    // parts together, so a null-named employee pairs with every username
+    // (score 0 via null propagation) as in a direct cross join.
+    val inv = MatchScore.employeeInvariants(
+      col("first_name"), col("last_name"), col("employee_name"))
+    val emps = sort_array(collect_list(struct(col("emp_id"), col("employee_name"))))
+    // FAN-OUT CAP (r20, top-k callers only): every employee of a name tuple
+    // shares that tuple's score, so within one username's (score desc,
+    // emp_id asc, employee_name asc) total order the k-th best row OF A
+    // TUPLE is preceded by k-1 same-score rows of that same tuple — an
+    // employee past the k-th of its tuple can never reach any username's
+    // top-k. Keeping each tuple's k smallest (emp_id, employee_name) rows
+    // is EXACT for top-k consumption. Duplicate rows within a tuple are
+    // interchangeable in every column the top-k output can reference.
+    val names = employees
+      .groupBy(inv("e_first").as("n_first"), inv("e_last").as("n_last"),
+        inv("e_full").as("n_full"))
+      .agg(fanoutTopK.fold(emps)(k => slice(emps, 1, k)).as("n_emps"))
     // invariants recomputed on the distinct tuples (n_first, n_last and
     // n_full among them, re-normalized: lower/trim are idempotent)
-    val eNames = eKeys.select(MatchScore.employeeInvariants(
-        col("n_first"), col("n_last"), col("n_full")).toSeq
-      .map { case (name, c) => c.as(name.replaceFirst("^e_", "n_")) }: _*)
-    val scoredNames = MatchScore.withScore(u.crossJoin(broadcast(eNames)), "n", threshold)
-      .select(col("username"), col("u_norm"), col("u_part1"), col("u_part2"),
-        col("u_sdx"), col("u_mp"), col("u_initial"), col("u_dot2_initial"),
-        col("n_first"), col("n_last"), col("n_full"), col("score"))
-    // FAN-OUT PRUNE (r20, top-k callers only): every employee of a name
-    // tuple shares that tuple's score, so within one username's
-    // (score desc, emp_id asc, employee_name asc) total order the k-th
-    // best row OF A TUPLE is preceded by k-1 same-score rows of that same
-    // tuple — an employee ranked > k inside its tuple can therefore never
-    // reach any username's global top-k. Keeping only each tuple's k
-    // smallest (emp_id, employee_name) rows is EXACT for top-k
-    // consumption and shrinks the window input from U*E rows to at most
-    // U*D*k (the bench's 64-name roster: 4.16M -> 53k rows). The window
-    // runs on the broadcast-small roster once, NOT per pair. Duplicate
-    // (emp_id, employee_name) rows within a tuple are interchangeable in
-    // every column the top-k output can reference, so row_number's
-    // arbitrary order among them cannot change the result.
-    val eFan = fanoutTopK match {
-      case None => e
-      case Some(k) =>
-        val byName = Window.partitionBy(col("e_first"), col("e_last"), col("e_full"))
-          .orderBy(col("emp_id").asc, col("employee_name").asc)
-        e.withColumn("__fan_rk", row_number().over(byName))
-          .filter(col("__fan_rk") <= k)
-          .drop("__fan_rk")
-    }
-    // fan back out: null-safe keys so a null-named employee keeps pairing
-    // with every username (score 0 via null propagation), exactly as the
-    // direct cross join did
-    scoredNames.join(broadcast(eFan),
-        col("n_first") <=> col("e_first") && col("n_last") <=> col("e_last") &&
-          col("n_full") <=> col("e_full"))
-      .drop("n_first", "n_last", "n_full")
+    val nameInv = MatchScore.employeeInvariants(col("n_first"), col("n_last"), col("n_full"))
+      .toSeq.map { case (name, c) => c.as(name.replaceFirst("^e_", "n_")) }
+    val scored = MatchScore.withScore(
+      u.crossJoin(broadcast(names.select(col("n_emps") +: nameInv: _*))), "n", threshold)
+    // SCORE-GATED FAN-OUT: one generator emits a name's employees. With a
+    // threshold it emits them only for pairs that reach it, so the ~95% of
+    // pairs below it stop here, before any row copy or top-k heap probe;
+    // [[matchOutput]] restores their usernames' sentinels from presence
+    // rows. A generator, not a filter: Catalyst pushes a `score >= t`
+    // filter into the nested-loop join's condition, where the bound would
+    // be evaluated a second time on every pruned pair.
+    val fan = threshold.fold(col("n_emps"))(t => when(col("score") >= t, col("n_emps")))
+    scored.select(col("username"), col("score"), explode(fan).as("__emp"))
+      .select(col("username"), col("__emp.emp_id").as("emp_id"),
+        col("__emp.employee_name").as("employee_name"), col("score"))
   }
-
-  /** Top-k rows per username (sub-threshold rows NOT filtered), dense-rank
-    * labeled. Keeping the sub-threshold rows lets [[matchOutput]] derive
-    * NOT-FOUND sentinels from the rn=1 row in the same pass instead of
-    * re-running the scored cross join for an anti join (which doubled the
-    * pipeline's cost — Spark does not de-duplicate a common subplan across
-    * union/join branches). Sub-threshold rows sort after qualifying ones,
-    * so their presence cannot change a qualifying row's dense rank — which
-    * is also why their scores may be the threshold prune's bounds rather
-    * than exact scores. */
-  private def rankedTopK(usernames: DataFrame, employees: DataFrame, topK: Int,
-                         threshold: Double): DataFrame =
-    rankedTopKOf(scoredPairsCapped(usernames, employees, Some(topK), Some(threshold)), topK)
 
   /** Per-username top-k of a scored (username, emp_id, employee_name,
     * score) frame via the bounded-heap aggregate [[graft.functions.topk_match]]
@@ -250,11 +229,28 @@ object MatchPipeline {
       .withColumn("match_type", rankLabel(col("rank")))
   }
 
+  /** `scored` (username, emp_id, employee_name, score) plus one PRESENCE
+    * row per username of `users`: null emp_id, employee_name and score. A
+    * null score sorts after every real row in the top-k order and never
+    * reaches a threshold, so a presence row cannot displace or re-rank a
+    * real row; it surfaces at rn = 1 exactly when its username has no
+    * scored row, and [[outputRows]] turns it into that username's
+    * sentinel. The one sentinel mechanism of [[matchOutput]] (empty
+    * roster, every pair below the threshold) and of
+    * [[MatchBlocking.matchOutput]] (no candidates). */
+  private[graft] def withPresenceRows(scored: DataFrame, users: DataFrame): DataFrame = {
+    val nul = lit(null).cast("string")
+    scored.select("username", "emp_id", "employee_name", "score")
+      .unionByName(users.select(col("username"), nul.as("emp_id"), nul.as("employee_name"),
+        lit(null).cast("double").as("score")))
+  }
+
   /** The output projection of a [[rankedTopKOf]] frame: its rows scoring
     * >= `threshold`, and a USER NOT FOUND sentinel, built from constants
-    * only, for each username whose BEST row (rn = 1) is below it — a
-    * username with no qualifying match gets its sentinel in the same pass.
-    * Shared by [[matchOutput]] and [[MatchBlocking.matchOutput]]. */
+    * only, for each username whose BEST row (rn = 1) is below it or is a
+    * presence row ([[withPresenceRows]]) — a username with no qualifying
+    * match gets its sentinel in the same pass. Shared by [[matchOutput]]
+    * and [[MatchBlocking.matchOutput]]. */
   private[graft] def outputRows(ranked: DataFrame, threshold: Double): DataFrame = {
     val qualifies = col("score") >= threshold
     ranked
@@ -288,20 +284,11 @@ object MatchPipeline {
                   topK: Int = TopK, threshold: Double = ScoreThreshold): DataFrame = {
     val users = usernames
       .select(col("username").cast("string").as("username")).distinct()
-    val fromPairs = outputRows(rankedTopK(users, employees, topK, threshold), threshold)
-    // Empty-roster edge: the cross join then emits NOTHING, so every
-    // username needs a sentinel. The anti-join probe is against roster
-    // .limit(1) — O(1), never the scored pairs.
-    val emptyRosterSentinels = users
-      .join(broadcast(employees.limit(1).select(lit(1).as("__probe"))),
-        lit(true), "left_anti")
-      .select(
-        col("username"),
-        lit("N/A").as("emp_id"),
-        lit("USER NOT FOUND").as("emp_name"),
-        lit("0.00%").as("confidence_score"),
-        lit("USER NOT FOUND").as("match_type"))
-    fromPairs.unionByName(emptyRosterSentinels)
+    // only qualifying pairs reach the top-k heap; a username without one
+    // (every pair below the threshold, or an empty roster) keeps its
+    // presence row, which becomes its sentinel
+    val scored = scoredPairsCapped(users, employees, Some(topK), Some(threshold))
+    outputRows(rankedTopKOf(withPresenceRows(scored, users), topK), threshold)
   }
 
   /** Name-pile-up factor above which the EXACT broadcast-NLJ path beats

@@ -61,7 +61,9 @@ object MatchScore {
         val dotParts = split(u, "\\.")
         when(size(dotParts) > 1, substring(try_element_at(dotParts, lit(2)), 1, 1)).otherwise(lit(""))
       },
-      "u_prof" -> fuzz_bound_profile(u)
+      "u_prof" -> fuzz_bound_profile(u),
+      // byte length for the pattern short-circuit's length guard
+      "u_bytes" -> octet_length(u)
     )
   }
 
@@ -89,6 +91,9 @@ object MatchScore {
         concat(f, lit("_"), l), concat(l, lit("_"), f),
         concat(f, l), concat(l, f),
         concat(f, lit(" "), l), concat(l, lit(" "), f)),
+      // every pattern is |f|+|l| or |f|+|l|+1 bytes long: the length guard
+      // in scoreFromInvariants compares this before probing the patterns
+      "e_fl_bytes" -> patternBaseBytes(f, l),
       // sorted-distinct token arrays of each B side of the three token-set
       // terms (r21): rapidfuzz default_process + tokenize + sort + dedup
       // hoisted to once per EMPLOYEE instead of once per scored pair — the
@@ -128,9 +133,19 @@ object MatchScore {
       // inline — bit-identical, just without the per-pair hoist — so
       // convenience callers need not thread the columns.
       fToks: Column = null, lToks: Column = null, enToks: Column = null,
-      bound: Option[(Column, Double)] = None): Column = {
+      bound: Option[(Column, Double)] = None,
+      // hoisted byte lengths (u_bytes from usernameInvariants, e_fl_bytes
+      // from employeeInvariants); the defaults derive them inline
+      uBytes: Column = null, flBytes: Column = null): Column = {
 
-    val isPattern = array_contains(ePatterns, u)
+    // A pattern is f and l joined by nothing or by one ASCII separator, so
+    // a username can equal one only when its byte length is |f|+|l| or
+    // |f|+|l|+1. The guard is two int compares; the probe it skips builds
+    // eight string views per pair. Null inputs give a null guard and a
+    // null probe alike, and a CaseWhen treats both as false.
+    val uLen = if (uBytes == null) octet_length(u) else uBytes
+    val flLen = if (flBytes == null) patternBaseBytes(f, l) else flBytes
+    val isPattern = (uLen === flLen || uLen === flLen + 1) && array_contains(ePatterns, u)
 
     // dead heuristic in the reference (main.py:54): 0 either way; optional
     // resurrected version behind the flag
@@ -174,7 +189,7 @@ object MatchScore {
       (uPart1 === f && uPart2 === l) || (uPart2 === f && uPart1 === l), lit(10)
     ).otherwise(lit(0))
     val initialBonus =
-      when(length(u) > 0 && length(f) > 0 && uInitial === eFirstInitial, lit(5)).otherwise(lit(0)) +
+      when(u =!= "" && f =!= "" && uInitial === eFirstInitial, lit(5)).otherwise(lit(0)) +
       when(uDot2Initial =!= "" && uDot2Initial === eFirstInitial, lit(5)).otherwise(lit(0))
     fuzz +
       (uSdx === eSdxLast).cast("int") * lit(6) +
@@ -201,6 +216,9 @@ object MatchScore {
   }
 
   private def u(name: String): Column = col(s"u_$name")
+
+  /** |f| + |l| in bytes: the length of the separator-free patterns. */
+  private def patternBaseBytes(f: Column, l: Column): Column = octet_length(f) + octet_length(l)
 
   /**
    * Adds `score` to a frame of (username, employee) pairs carrying the
@@ -230,7 +248,8 @@ object MatchScore {
         e("sdx_first"), e("sdx_last"), e("mp_first"), e("mp_last"),
         e("first_initial"), e("patterns"),
         fToks = e("first_toks"), lToks = e("last_toks"), enToks = e("full_toks"),
-        bound = threshold.map(t => (col("__ub"), t))))
+        bound = threshold.map(t => (col("__ub"), t)),
+        uBytes = u("bytes"), flBytes = e("fl_bytes")))
       .drop("__ub")
   }
 }

@@ -38,12 +38,17 @@ import graft.pipeline.{MatchBlocking, MatchPipeline}
  *    batches re-serve (same answer) by design — it is a serving loop, not
  *    an ingest: each request deserves its response.
  *  - LATENCY per micro-batch = one broadcast-NLJ scoring pass over
- *    |batch| x |roster| plus one username-partitioned window: seconds for
+ *    |batch| x |roster| plus one username-partitioned top-k: seconds for
  *    thousand-row request files against a 10^4-row roster on a small
- *    cluster. `maxFilesPerTrigger` trades latency for throughput: 1 =
- *    lowest per-request latency, higher values amortize fixed per-batch
- *    planning cost across request files (results are invariant either
- *    way — micro-batch boundaries cannot change a verdict).
+ *    cluster. The exact path broadcasts ONE roster-side frame per batch
+ *    (the distinct names, each carrying its employees) and fans a name out
+ *    to its employees only for pairs scoring >= the threshold; a username
+ *    with none gets its sentinel from a presence row, with no anti join
+ *    or extra broadcast (MatchPipeline scaladoc). `maxFilesPerTrigger`
+ *    trades latency for throughput: 1 = lowest per-request latency,
+ *    higher values amortize fixed per-batch planning cost across request
+ *    files (results are invariant either way — micro-batch boundaries
+ *    cannot change a verdict).
  */
 object MatchServing {
 

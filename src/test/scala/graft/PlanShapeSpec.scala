@@ -98,22 +98,31 @@ class PlanShapeSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.shuffle.partitions", prevConf)
   }
 
-  test("threshold prune: matchOutput keeps its 6 exchanges, 3 broadcasts, 2 nested-loop joins") {
-    // the bound is one more projection inside the scoring stage: no anti
-    // join, exchange or broadcast is added (counts taken from the plan
-    // before the prune, AQE off so every exchange is visible)
+  test("score-gated fan-out: matchOutput plans 1 broadcast, 1 condition-free nested-loop join, no hash join") {
+    // one broadcast (the distinct names, each carrying its employees) into
+    // one nested-loop join with no condition: the fan-out is a generator
+    // after the score, not a hash join, and the sentinels come from
+    // presence rows, not an anti join. Each kernel appears once: a
+    // `score >= t` filter pushed into the join condition would copy the
+    // score's CaseWhen, and with it both kernels (AQE off so every
+    // exchange is visible)
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
-    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
     val employees = graft.schema.EmployeeNormalizer.normalize(spark.read.option("header", "true")
       .csv(s"${SparkTestBase.ReferenceDir}/employee.csv"))
     val usernames = spark.read.option("header", "true")
       .csv(s"${SparkTestBase.ReferenceDir}/usernames.csv").select("username")
     val p = preparedPlan(graft.pipeline.MatchPipeline.matchOutput(usernames, employees))
-    assert(p.collect { case e: ShuffleExchangeExec => e }.size === 6, p)
-    assert(p.collect { case e: BroadcastExchangeExec => e }.size === 3, p)
-    // the scoring cross join and the empty-roster anti join
-    assert(p.collect { case j: BroadcastNestedLoopJoinExec => j }.size === 2, p)
-    assert(p.toString.contains("fuzz_composite_ub"), p)
+    assert(p.collect { case e: ShuffleExchangeExec => e }.size === 4, p)
+    assert(p.collect { case e: BroadcastExchangeExec => e }.size === 1, p)
+    val nlj = p.collect { case j: BroadcastNestedLoopJoinExec => j }
+    assert(nlj.size === 1 && nlj.head.condition.isEmpty, p)
+    assert(p.collect { case j: BroadcastHashJoinExec => j }.isEmpty, p)
+    val kernels = p.flatMap(_.expressions).flatMap(_.collect {
+      case _: graft.functions.FuzzCompositePre => "pre"
+      case _: graft.functions.FuzzCompositeUB => "ub"
+    })
+    assert(kernels.sorted === Seq("pre", "ub"), p)
   }
 
   test("per-group top-k installs the pre-shuffle WindowGroupLimit") {

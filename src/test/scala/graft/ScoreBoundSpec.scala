@@ -178,11 +178,12 @@ class ScoreBoundSpec extends AnyFunSuite {
 
   /** The unpruned form of matchOutput: the top-k of the exact scoredPairs,
     * through the same output projection. */
-  private def unprunedOutput(usernames: DataFrame, roster: DataFrame): DataFrame = {
+  private def unprunedOutput(usernames: DataFrame, roster: DataFrame,
+                             threshold: Double = MatchPipeline.ScoreThreshold): DataFrame = {
     val users = usernames.select(col("username").cast("string").as("username")).distinct()
     MatchPipeline.outputRows(
       MatchPipeline.rankedTopKOf(MatchPipeline.scoredPairs(users, roster), MatchPipeline.TopK),
-      MatchPipeline.ScoreThreshold)
+      threshold)
   }
 
   private def rows(df: DataFrame): Seq[String] =
@@ -198,6 +199,8 @@ class ScoreBoundSpec extends AnyFunSuite {
       assert(rows(MatchPipeline.matchOutput(u, e)) === rows(unprunedOutput(u, e)), s"n_part=$n")
   }
 
+  private val notFound = "|N/A|USER NOT FOUND|0.00%|USER NOT FOUND"
+
   test("an all-pruned username still gets its sentinel; an empty roster gives only sentinels") {
     val (_, roster) = referenceInputs
     val probe = Seq("zzz_qqq_999").toDF("username")
@@ -206,9 +209,48 @@ class ScoreBoundSpec extends AnyFunSuite {
     assert(pairs.filter(col("ub") >= 50.0 || col("is_pattern") || col("ub").isNull).isEmpty)
     assert(rows(MatchPipeline.matchOutput(probe, roster)) ===
       Seq("zzz_qqq_999|N/A|USER NOT FOUND|0.00%|USER NOT FOUND"))
+    // exactly one sentinel per distinct username, on both paths
     val empty = roster.limit(0)
-    assert(rows(MatchPipeline.matchOutput(Seq("zzz_qqq_999", "john.smith").toDF("username"), empty)) ===
-      Seq("john.smith|N/A|USER NOT FOUND|0.00%|USER NOT FOUND",
-        "zzz_qqq_999|N/A|USER NOT FOUND|0.00%|USER NOT FOUND"))
+    val users = Seq(Some("zzz_qqq_999"), Some("john.smith"), Some("john.smith"), None, Some(""))
+      .toDF("username")
+    val expected = Seq("", "john.smith", "null", "zzz_qqq_999").map(_ + notFound).sorted
+    assert(rows(MatchPipeline.matchOutput(users, empty)) === expected)
+    assert(rows(graft.pipeline.MatchBlocking.matchOutput(users, empty)) === expected)
+  }
+
+  test("threshold 0 with a roster smaller than k: every pair is output, no presence row") {
+    val users = Seq("john.smith", "neha", "zzz_qqq_999").toDF("username")
+    val roster = Seq(("1", "John", "Smith", "John Smith"), ("2", "Neha", "Singh", "Neha Singh"))
+      .toDF("emp_id", "first_name", "last_name", "employee_name")
+    val out = rows(MatchPipeline.matchOutput(users, roster, threshold = 0.0))
+    assert(out === rows(unprunedOutput(users, roster, 0.0)))
+    assert(out.size === 6 && !out.exists(_.endsWith(notFound)), out.mkString("\n"))
+  }
+
+  test("null username and null-named employee: pruned output equals the unpruned one") {
+    val users = Seq(None, Some("john.smith"), Some("smith"), Some("zzz_qqq_999")).toDF("username")
+    val roster = Seq(("1", "John", "Smith", "John Smith"), ("4", null, "Smith", "Smith"),
+      ("8", null, null, null), ("9", null, null, null))
+      .toDF("emp_id", "first_name", "last_name", "employee_name")
+    for (t <- Seq(50.0, 0.0)) {
+      val out = rows(MatchPipeline.matchOutput(users, roster, threshold = t))
+      assert(out === rows(unprunedOutput(users, roster, t)), s"threshold $t")
+      // the null username: one sentinel at 50; at 0 its 4 zero-score pairs
+      val nul = out.filter(_.startsWith("null|"))
+      if (t > 0) assert(nul === Seq("null" + notFound))
+      else assert(nul.size === 4 && nul.forall(_.endsWith("|0.00%|HIGH CONFIDENCE")), nul)
+    }
+  }
+
+  test("duplicate (emp_id, employee_name) rows in one name tuple at the k cap") {
+    val users = Seq("john.smith", "jsmith").toDF("username")
+    // one name tuple, six employees: the cap keeps the 4 smallest rows,
+    // duplicates included, in (emp_id, employee_name) order
+    val roster = Seq("3", "1", "0", "1", "0", "1")
+      .map(id => (id, "John", "Smith", "John Smith"))
+      .toDF("emp_id", "first_name", "last_name", "employee_name")
+    val out = rows(MatchPipeline.matchOutput(users, roster))
+    assert(out === rows(unprunedOutput(users, roster)))
+    assert(out.filter(_.startsWith("john.smith|")).map(_.split('|')(1)) === Seq("0", "0", "1", "1"))
   }
 }
