@@ -43,6 +43,18 @@ import graft.scoring.MatchScore
  */
 object MatchBlocking {
 
+  /** Per-key employee cap (see [[candidatePairs]]): a key held by more
+    * employees than this sub-splits by name-prefix signature, and residual
+    * over-cap sub-buckets keep their cap-smallest emp_ids. The reference
+    * workload's hottest key holds < 20 employees, so the default changes
+    * nothing there; a pathological roster (thousands of employees sharing
+    * one name) stays bounded at `cap * |sub-keys probed|` candidates. */
+  val DefaultMaxEmployeesPerKey = 200
+
+  /** Length of the tier-3 username grams and employee-token prefixes (see
+    * [[candidatePairs]]); 3 favors recall. */
+  private val Gram = 3
+
   /** Distinct candidate (username, emp_id) pairs sharing >= 1 blocking key.
     *
     * Key tiers (each tier rescues a class of true matches the previous one
@@ -53,10 +65,9 @@ object MatchBlocking {
     *  2. split parts + soundex + metaphone vs name tokens and their codes —
     *     separator-structured usernames (`kul_sanjay`) and misspellings that
     *     preserve phonetics;
-    *  3. every char `gram`-gram of the username vs the `gram`-char prefix of
+    *  3. every char `Gram`-gram of the username vs the `Gram`-char prefix of
     *     first/last — embedded and truncated tokens (`iamkulkarni`,
-    *     `bhatiaX`, `deepz`). `gram`=3 favors recall; raise to 4 at larger
-    *     rosters to shrink bucket collision volume (the recall/cost knob);
+    *     `bhatiaX`, `deepz`);
     *  4. the trailing-digit-stripped username vs the first+last-initial
     *     composite — `harshm37`-style usernames land on `harshm` directly
     *     instead of fanning out through the (often hot) bare first-name
@@ -71,24 +82,15 @@ object MatchBlocking {
     * them after a driver GC — see [[matchOutput]]'s lifecycle note for
     * long-lived callers.
     */
-  /** Per-key employee cap (see [[candidatePairs]]): a key held by more
-    * employees than this sub-splits by name-prefix signature, and residual
-    * over-cap sub-buckets keep their cap-smallest emp_ids. The reference
-    * workload's hottest key holds < 20 employees, so the default changes
-    * nothing there; a pathological roster (thousands of employees sharing
-    * one name) stays bounded at `cap * |sub-keys probed|` candidates. */
-  val DefaultMaxEmployeesPerKey = 200
-
   def candidatePairs(usernames: DataFrame, employees: DataFrame,
-                     gram: Int = 3,
                      maxEmployeesPerKey: Int = DefaultMaxEmployeesPerKey,
                      metricTag: String = "match_blocking"): DataFrame = {
     val u = MatchPipeline.prepareUsernames(usernames)
     val e = MatchPipeline.prepareEmployees(employees)
     val uGrams = expr(
-      s"transform(sequence(1, greatest(length(u_norm) - ${gram - 1}, 1)), i -> substring(u_norm, i, $gram))")
+      s"transform(sequence(1, greatest(length(u_norm) - ${Gram - 1}, 1)), i -> substring(u_norm, i, $Gram))")
     // uSigs: the probe-side sub-bucket signatures for HOT keys — every
-    // `gram`-gram (literal name material) PLUS the phonetic codes
+    // `Gram`-gram (literal name material) PLUS the phonetic codes
     // (soundex AND metaphone — both are blocking-key tiers, so both must
     // be salvageable) of the whole username and its split parts. The
     // phonetic members matter: a probe like `jhon99` shares only the
@@ -138,7 +140,7 @@ object MatchBlocking {
         col("e_sdx_first"), col("e_sdx_last"), col("e_mp_first"), col("e_mp_last"),
         explode(array_distinct(concat(col("e_patterns"), array(
           col("e_first"), col("e_last"),
-          substring(col("e_first"), 1, gram), substring(col("e_last"), 1, gram),
+          substring(col("e_first"), 1, Gram), substring(col("e_last"), 1, Gram),
           col("e_sdx_first"), col("e_sdx_last"),
           col("e_mp_first"), col("e_mp_last"),
           // tier 4: first + last-initial composite — the discriminative
@@ -164,8 +166,8 @@ object MatchBlocking {
     // fixed id-order subset either (that made employees ranked past the cap
     // UNREACHABLE through the key for every probe); instead a hot key is
     // SUB-SPLIT by a secondary signature both sides can derive — the
-    // `gram`-char prefix, soundex, and metaphone of each employee name
-    // token vs every `gram`-gram plus the phonetic codes of the username
+    // `Gram`-char prefix, soundex, and metaphone of each employee name
+    // token vs every `Gram`-gram plus the phonetic codes of the username
     // and its split parts — so a
     // probe that shares name material (literal OR phonetic) with an
     // employee meets it in a discriminative sub-bucket regardless of id
@@ -201,8 +203,8 @@ object MatchBlocking {
       .select("emp_id", "block_key")
     val eHot = eKeys.join(hotKeys, Seq("block_key"), "left_semi")
       .select(col("emp_id"), explode(array_distinct(array(
-          concat(col("block_key"), lit(sep), substring(col("e_first"), 1, gram)),
-          concat(col("block_key"), lit(sep), substring(col("e_last"), 1, gram)),
+          concat(col("block_key"), lit(sep), substring(col("e_first"), 1, Gram)),
+          concat(col("block_key"), lit(sep), substring(col("e_last"), 1, Gram)),
           concat(col("block_key"), lit(sep), col("e_sdx_first")),
           concat(col("block_key"), lit(sep), col("e_sdx_last")),
           concat(col("block_key"), lit(sep), col("e_mp_first")),
@@ -271,8 +273,7 @@ object MatchBlocking {
     * trigger periodic driver GC to cap executor storage. */
   def matchOutput(usernames: DataFrame, employees: DataFrame,
                   topK: Int = MatchPipeline.TopK,
-                  threshold: Double = MatchPipeline.ScoreThreshold,
-                  maxEmployeesPerKey: Int = DefaultMaxEmployeesPerKey): DataFrame = {
+                  threshold: Double = MatchPipeline.ScoreThreshold): DataFrame = {
     // same duplicate-input pinning as MatchPipeline.matchOutput: one result
     // group per distinct username value
     val users = usernames
@@ -291,15 +292,15 @@ object MatchBlocking {
     // separate count() scan. String form, never Observation: registering an
     // Observation materializes the session's non-serializable
     // observationManager (see Dedup.clusters).
-    val candObs = candidatePairs(users, employees, maxEmployeesPerKey = maxEmployeesPerKey)
+    val candObs = candidatePairs(users, employees)
       .observe("match_blocking_cand_count", count(lit(1)).as("n"))
     val cand = candObs
       .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    // SIZE-AWARE spread of the scoring stage (the MatchPipeline.scoredPairs
-    // pattern): the checkpointed candidates are a few narrow MB even when
-    // the kernel work they fan into is seconds of CPU, so AQE coalesces the
-    // scoring join down to one task (measured: the post-checkpoint score +
-    // rank stages ran 1-task at sf0.1). An explicit numPartitions
+    // SIZE-AWARE spread of the scoring stage: the checkpointed candidates
+    // are a few narrow MB even when the kernel work they fan into is
+    // seconds of CPU, so AQE coalesces the scoring join down to one task
+    // (measured: the post-checkpoint score + rank stages ran 1-task at
+    // sf0.1). An explicit numPartitions
     // repartition by username is never AQE-coalesced, satisfies the join
     // AND the rank window partitioning (no further exchange), and is
     // skipped when the candidates already arrive spread (the 100 TB case).

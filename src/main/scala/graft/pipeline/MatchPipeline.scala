@@ -39,10 +39,11 @@ import graft.scoring.MatchScore
  *  - per-username and per-employee invariants (phonetic codes, splits,
  *    bound profiles) are computed O(U)+O(E) times before the join, not
  *    O(U*E) times inside it;
- *  - past the size-aware spread of small inputs (see [[scoredPairs]]), the
- *    username side is shuffled only by the top-k aggregate's hash
- *    partitioning on `username`; partial aggregation bounds that at k rows
- *    per username per map task, and the dense-rank window reuses it;
+ *  - past [[matchOutput]]'s `distinct()`, the username side is shuffled
+ *    twice: by the round-robin spread ahead of the scoring join (see
+ *    [[scoredPairs]]) and by the top-k aggregate's hash partitioning on
+ *    `username`; partial aggregation bounds the latter at k rows per
+ *    username per map task, and the dense-rank window reuses it;
  *  - deterministic tiebreak (score desc, emp_id asc, employee_name asc) —
  *    the reference's pandas unstable sort makes ties unspecified
  *    (SURVEY.md §7.4.1).
@@ -86,15 +87,17 @@ object MatchPipeline {
     * serializing the entire O(U*E) scoring loop onto one thread (measured
     * 48s -> ~2s at sf0.1 on local[32]). The shuffled rows are small (a
     * username and its hoisted invariants, a few hundred bytes), so the
-    * repartition costs nothing relative to the scoring it spreads — on a
-    * SMALL input. A 100 TB username table arriving already spread over
-    * thousands of scan/shuffle partitions needs no rebalancing, so the
-    * exchange is SIZE-AWARE: it is skipped when the input's planned (pre-
-    * AQE) partition count is already >= 2x defaultParallelism AND that
-    * count cannot shrink under AQE (scan splits or an explicit
-    * numPartitions repartition — shapes pinned in PlanShapeSpec). An
-    * explicit numPartitions repartition is never AQE-coalesced, so the
-    * small-input fix cannot regress. */
+    * repartition costs little next to the scoring it spreads.
+    *
+    * The spread is UNCONDITIONAL: the input's partition count cannot be
+    * read ahead of execution well enough to skip it. A file scan reports
+    * `UnknownPartitioning(0)`, so a CSV or parquet input of any size reads
+    * 0 partitions. And `queryExecution.sparkPlan` is planned before
+    * EnsureRequirements adds its exchanges: an input that reads as
+    * pre-spread there can still reach the join through an exchange AQE
+    * coalesces (as [[matchOutput]]'s `distinct()` does), and the scoring
+    * stage then runs on one task. An explicit numPartitions repartition is
+    * never AQE-coalesced (pinned in PlanShapeSpec). */
   def scoredPairs(usernames: DataFrame, employees: DataFrame): DataFrame =
     scoredPairsCapped(usernames, employees, None, None)
 
@@ -108,30 +111,6 @@ object MatchPipeline {
   private def scoredPairsCapped(usernames: DataFrame, employees: DataFrame,
                                 fanoutTopK: Option[Int],
                                 threshold: Option[Double]): DataFrame = {
-    val spark = usernames.sparkSession
-    val parallelism = spark.sparkContext.defaultParallelism
-    // static planned partition count: queryExecution.sparkPlan is the
-    // pre-adaptive physical plan, so reading it triggers no execution (the
-    // adaptive plan's .rdd would run every upstream stage eagerly)
-    val plannedPlan = usernames.queryExecution.sparkPlan
-    val planned = plannedPlan.outputPartitioning.numPartitions
-    // The skip is only trustworthy when `planned` cannot shrink under AQE
-    // at runtime: scan-derived splits (no exchange supplies the count) or
-    // an explicit numPartitions repartition (REPARTITION_BY_NUM — never
-    // AQE-coalesced). An optimizer-inserted or column-only exchange plans
-    // at the static spark.sql.shuffle.partitions default and CAN coalesce
-    // to one task on a small input — serializing the whole O(U x E)
-    // scoring stage under a vanilla 200-partition session — so those force
-    // the explicit repartition whatever count they print. Inspecting the
-    // exchange's shuffleOrigin (not comparing counts, the r12 form) means
-    // a genuinely data-driven input whose count happens to EQUAL the conf
-    // value is no longer force-shuffled — at 100 TB that was a full extra
-    // exchange of the big side.
-    val aqeCollapsible = {
-      import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
-      plannedPlan.collectFirst { case e: ShuffleExchangeExec => e }
-        .exists(_.shuffleOrigin != REPARTITION_BY_NUM)
-    }
     // 4 waves of fine-grained tasks: with one task per core a single
     // straggler (GC pause, CPU steal) stretches the whole stage; finer
     // slices rebalance.
@@ -143,11 +122,9 @@ object MatchPipeline {
     // username invariant (metaphone, soundex, splits, bound profile) runs
     // once per PAIR (about a quarter of the wide scoring stage's samples
     // in a JFR profile). Derived before the exchange, the shuffle writes
-    // them once per username and the join reads plain fields. An input
-    // that skips the exchange still derives them per pair.
-    val u =
-      if (planned >= 2 * parallelism && !aqeCollapsible) prepareUsernames(usernames)
-      else prepareUsernames(usernames).repartition(4 * parallelism)
+    // them once per username and the join reads plain fields.
+    val u = prepareUsernames(usernames)
+      .repartition(4 * usernames.sparkSession.sparkContext.defaultParallelism)
     // DISTINCT-NAME MEMOIZATION (r20, guide §1.2 "the distributed
     // algorithm"): the score is a pure function of (username, e_first,
     // e_last, e_full) — emp_id never enters it — so the expensive kernels
@@ -298,10 +275,14 @@ object MatchPipeline {
     * candidate set approaches the full cross product, and the blocked
     * path pays its key-explode shuffles on top. Measured on the pinned
     * bench pair: the 64-name roster at sf0.1 (pile-up ~312) runs exact
-    * 2.2x cheaper than blocked, while the wide ~20k-name roster (pile-up
-    * ~1) runs blocked 2.5x cheaper than exact. 16 sits in the decade of
-    * slack between the two regimes (3.2 vs 31 on the narrow fixture's
-    * smallest/middle scales). */
+    * 2.2x cheaper than blocked. On the wide ~20k-name roster (pile-up ~1)
+    * blocking does not win either: on a 4-vCPU host, perfbench's
+    * `wide_exact` (125 usernames x 20,000 employees) takes a median 3.13 s
+    * and 10.6 CPU-s a pass, and `wide_blocked` on the same inputs
+    * 4.0-6.8 s and 11-23 CPU-s (bimodal from run to run; not an adjacent
+    * A/B). The threshold stays until an adjacent exact/blocked A/B sets
+    * it; 16 sits in the decade of slack between the two regimes (3.2 vs
+    * 31 on the narrow fixture's smallest/middle scales). */
   val ExactWinsPileupFactor = 16.0
 
   /** The [[auto]] decision, exposed for specs and for SQL replay: average

@@ -60,42 +60,49 @@ class PlanShapeSpec extends AnyFunSuite {
       s"similarity join must never shuffle-sort the username side:\n$p")
   }
 
-  test("scoredPairs repartition is size-aware: forced for narrow inputs, skipped for wide ones") {
-    import org.apache.spark.sql.functions._
+  test("scoredPairs always spreads usernames round robin") {
+    import org.apache.spark.sql.functions.col
     import spark.implicits._
     val employees = Seq(("1", "amit", "jain", "Amit Jain"))
       .toDF("emp_id", "first_name", "last_name", "employee_name")
-    val narrow = Seq("amit123", "jain_a").toDF("username") // few planned partitions
-    val pNarrow = plan(graft.pipeline.MatchPipeline.scoredPairs(narrow, employees))
-    assert(pNarrow.contains("RoundRobinPartitioning"),
-      s"small input must still get the AQE-collapse-proof exchange:\n$pNarrow")
-    // an input already spread over >= 2x defaultParallelism partitions must
-    // NOT pay a second forced shuffle on a 100 TB username table
-    val wide = narrow.repartition(2 * spark.sparkContext.defaultParallelism, col("username"))
-    val pWide = plan(graft.pipeline.MatchPipeline.scoredPairs(wide, employees))
-    assert(!pWide.contains("RoundRobinPartitioning"),
-      s"wide input paid a forced round-robin exchange:\n$pWide")
+    val narrow = Seq("amit123", "jain_a").toDF("username")
+    // a local relation, and a column-only repartition (planned at the conf
+    // default, coalescible to one task by AQE on a small input)
+    for (in <- Seq(narrow, narrow.repartition(col("username")))) {
+      val p = plan(graft.pipeline.MatchPipeline.scoredPairs(in, employees))
+      assert(p.contains("RoundRobinPartitioning"), s"usernames were not spread:\n$p")
+    }
+  }
 
-    // guard refinement (r13): a DATA-DRIVEN input whose pinned partition
-    // count coincidentally EQUALS spark.sql.shuffle.partitions must NOT be
-    // force-shuffled (the r12 count-comparison form misfired here — a full
-    // extra exchange of the big side at 100 TB)...
-    val prevConf = spark.conf.get("spark.sql.shuffle.partitions")
+  test("pre-partitioned usernames still score on 4 x defaultParallelism tasks") {
+    // an explicit numPartitions input reads as already spread in
+    // sparkPlan, but matchOutput's distinct() exchange (added later by
+    // EnsureRequirements) is AQE-coalesced on a small input: without the
+    // spread the nested-loop join's stream side is ONE partition
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    object aqe extends AdaptiveSparkPlanHelper
+    val par = spark.sparkContext.defaultParallelism
+    val employees = graft.schema.EmployeeNormalizer.normalize(spark.read.option("header", "true")
+      .csv(s"${SparkTestBase.ReferenceDir}/employee.csv"))
+    val usernames = spark.read.option("header", "true")
+      .csv(s"${SparkTestBase.ReferenceDir}/usernames.csv").select("username")
+    val prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
     try {
-      val n = 2 * spark.sparkContext.defaultParallelism
-      spark.conf.set("spark.sql.shuffle.partitions", n.toString)
-      val pinnedAtConf = narrow.repartition(n, col("username"))
-      val pPinned = plan(graft.pipeline.MatchPipeline.scoredPairs(pinnedAtConf, employees))
-      assert(!pPinned.contains("RoundRobinPartitioning"),
-        s"numPartitions-pinned input at exactly confParts was force-shuffled:\n$pPinned")
-      // ...while an AQE-COALESCIBLE exchange at the same width (column-only
-      // repartition plans at the conf default and may collapse to one task
-      // on a small input) still forces the explicit repartition
-      val collapsible = narrow.repartition(col("username"))
-      val pColl = plan(graft.pipeline.MatchPipeline.scoredPairs(collapsible, employees))
-      assert(pColl.contains("RoundRobinPartitioning"),
-        s"AQE-collapsible exchange skipped the serialize-proof repartition:\n$pColl")
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevConf)
+      val out = graft.pipeline.MatchPipeline.matchOutput(usernames.repartition(2 * par), employees)
+      val rows = out.collect().map(_.toString).sorted
+      // the final adaptive plan: query stages are leaves to plain collect
+      val nlj = aqe.collect(out.queryExecution.executedPlan) {
+        case j: BroadcastNestedLoopJoinExec => j
+      }
+      assert(nlj.size === 1, out.queryExecution.executedPlan)
+      assert(nlj.head.left.outputPartitioning.numPartitions === 4 * par,
+        out.queryExecution.executedPlan)
+      val want = graft.pipeline.MatchPipeline.matchOutput(usernames, employees)
+        .collect().map(_.toString).sorted
+      assert(rows.toSeq === want.toSeq)
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
   test("score-gated fan-out: matchOutput plans 1 broadcast, 1 condition-free nested-loop join, no hash join") {
