@@ -176,6 +176,13 @@ final class MatchTopKHeap(val k: Int) {
     cmpStr(empName, w.empName) < 0
   }
 
+  /** The score a row must reach to be admitted: the current k-th best score
+    * once the heap holds k rows (a null k-th counts as -Infinity), else
+    * -Infinity. */
+  def floor: Double =
+    if (heap.size < k || heap.head.score == null) Double.NegativeInfinity
+    else heap.head.score.doubleValue()
+
   /** Window-order (best-first) snapshot — position i is the row with
     * row_number i+1. */
   def sorted: Array[MatchRow] = {

@@ -97,7 +97,7 @@ case class FuzzComposite(first: Expression, second: Expression,
 /** `preprocTokens(s)` (rapidfuzz default_process + tokenize + sort + dedup)
   * as a column: the employee-side half of every token-set term, hoisted to
   * the broadcast side so it runs once per ROSTER ROW instead of once per
-  * scored pair ([[FuzzCompositePre]]). */
+  * scored pair (`Fuzz.compositeFuzzPre`). */
 case class FuzzPreprocTokens(child: Expression) extends UnaryExpression with ExpectsInputTypes {
   override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
@@ -110,72 +110,8 @@ case class FuzzPreprocTokens(child: Expression) extends UnaryExpression with Exp
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 
-/** [[FuzzComposite]] with the employee-side token preprocessing hoisted into
-  * [[FuzzPreprocTokens]] columns: children are (u, en, fToks, lToks, enToks)
-  * where the token arrays are `fuzz_preproc_tokens` of the f/l/en the
-  * unfused form consumed. Null semantics are IDENTICAL to the 4-ary form:
-  * each token array is null exactly when its source string is null
-  * (FuzzPreprocTokens is a null-intolerant unary), and this expression nulls
-  * when ANY child is null — so the composite is null on exactly the same
-  * rows. Scores are bit-identical (Fuzz.compositeFuzzPre's contract). */
-case class FuzzCompositePre(u: Expression, en: Expression,
-                            fToks: Expression, lToks: Expression, enToks: Expression)
-    extends Expression with ExpectsInputTypes {
-  override def children: Seq[Expression] = Seq(u, en, fToks, lToks, enToks)
-  override def inputTypes: Seq[DataType] = Seq(StringType, StringType,
-    ArrayType(StringType), ArrayType(StringType), ArrayType(StringType))
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def foldable: Boolean = children.forall(_.foldable)
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val uV = u.eval(input)
-    if (uV == null) return null
-    val enV = en.eval(input)
-    if (enV == null) return null
-    val fT = fToks.eval(input)
-    if (fT == null) return null
-    val lT = lToks.eval(input)
-    if (lT == null) return null
-    val enT = enToks.eval(input)
-    if (enT == null) return null
-    Fuzz.compositeFuzzPre(
-      uV.asInstanceOf[UTF8String], enV.asInstanceOf[UTF8String].toString,
-      fT.asInstanceOf[ArrayData], lT.asInstanceOf[ArrayData],
-      enT.asInstanceOf[ArrayData])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val uC = u.genCode(ctx)
-    val enC = en.genCode(ctx)
-    val fC = fToks.genCode(ctx)
-    val lC = lToks.genCode(ctx)
-    val enTC = enToks.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${uC.code}
-        ${enC.code}
-        ${fC.code}
-        ${lC.code}
-        ${enTC.code}
-        boolean ${ev.isNull} = true;
-        double ${ev.value} = 0.0;
-        if (!${uC.isNull} && !${enC.isNull} && !${fC.isNull} && !${lC.isNull} && !${enTC.isNull}) {
-          ${ev.isNull} = false;
-          ${ev.value} = graft.functions.Fuzz.compositeFuzzPre(
-            ${uC.value}, ${enC.value}.toString(), ${fC.value}, ${lC.value}, ${enTC.value});
-        }
-      """)
-  }
-
-  override def prettyName: String = "fuzz_composite_pre"
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): Expression =
-    copy(newChildren(0), newChildren(1), newChildren(2), newChildren(3), newChildren(4))
-}
-
 /** [[Fuzz.boundProfile]] as a column: the character histograms, lengths and
-  * token hashes [[FuzzCompositeUB]] reads, hoisted to once per row on each
+  * token hashes `Fuzz.compositeFuzzUB` reads, hoisted to once per row on each
   * side of the scoring join. */
 case class FuzzBoundProfile(child: Expression) extends UnaryExpression with ExpectsInputTypes {
   override def inputTypes: Seq[DataType] = Seq(StringType)
@@ -187,29 +123,6 @@ case class FuzzBoundProfile(child: Expression) extends UnaryExpression with Expe
     defineCodeGen(ctx, ev, a => s"graft.functions.Fuzz.boundProfileArrayData($a)")
   override def prettyName: String = "fuzz_bound_profile"
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-
-/** Upper bound on [[FuzzCompositePre]] from the [[FuzzBoundProfile]]s of
-  * (u, en, l, f) ([[Fuzz.compositeFuzzUB]]): >= the composite on every row
-  * where both are non-null, and null on exactly the rows where it is (each
-  * profile is null exactly when its source string is). */
-case class FuzzCompositeUB(first: Expression, second: Expression,
-                           third: Expression, fourth: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.QuaternaryExpression
-    with ExpectsInputTypes {
-  override def inputTypes: Seq[DataType] = Seq.fill(4)(ArrayType(LongType))
-  override def dataType: DataType = DoubleType
-  override def foldable: Boolean = children.forall(_.foldable)
-  override def nullSafeEval(u: Any, en: Any, l: Any, f: Any): Any =
-    Fuzz.compositeFuzzUB(u.asInstanceOf[ArrayData], en.asInstanceOf[ArrayData],
-      l.asInstanceOf[ArrayData], f.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (u, en, l, f) =>
-      s"graft.functions.Fuzz.compositeFuzzUB($u, $en, $l, $f)")
-  override def prettyName: String = "fuzz_composite_ub"
-  override protected def withNewChildrenInternal(
-      f1: Expression, f2: Expression, f3: Expression, f4: Expression): Expression =
-    copy(f1, f2, f3, f4)
 }
 
 abstract class UnaryStringStringExpression extends UnaryExpression with ExpectsInputTypes {

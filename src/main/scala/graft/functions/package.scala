@@ -31,20 +31,11 @@ package object functions {
   def fuzz_composite(u: Column, f: Column, l: Column, en: Column): Column =
     c(FuzzComposite(e(u), e(f), e(l), e(en)))
   /** Sorted-distinct rapidfuzz-processed tokens of a string — the hoistable
-    * employee-side half of a token-set term (see [[FuzzCompositePre]]). */
+    * employee-side half of a token-set term (see `Fuzz.compositeFuzzPre`). */
   def fuzz_preproc_tokens(s: Column): Column = c(FuzzPreprocTokens(e(s)))
-  /** [[fuzz_composite]] with the employee-side token arrays precomputed
-    * ([[fuzz_preproc_tokens]] of the same f/l/en) — bit-identical scores. */
-  def fuzz_composite_pre(u: Column, en: Column,
-                         fToks: Column, lToks: Column, enToks: Column): Column =
-    c(FuzzCompositePre(e(u), e(en), e(fToks), e(lToks), e(enToks)))
   /** Histograms, lengths and token hashes of a string: the hoistable input
-    * of [[fuzz_composite_ub]]. */
+    * of `Fuzz.compositeFuzzUB`. */
   def fuzz_bound_profile(s: Column): Column = c(FuzzBoundProfile(e(s)))
-  /** Upper bound on [[fuzz_composite_pre]] from the [[fuzz_bound_profile]]s
-    * of (u, en, l, f). */
-  def fuzz_composite_ub(u: Column, en: Column, l: Column, f: Column): Column =
-    c(FuzzCompositeUB(e(u), e(en), e(l), e(f)))
 
   // ---- phonetics (reference main.py:63-66) ----
   def soundex_jf(a: Column): Column = c(SoundexJf(e(a)))

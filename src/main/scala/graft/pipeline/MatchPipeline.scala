@@ -1,49 +1,51 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.scoring.MatchScore
+import graft.scoring.{DecodedNames, MatchScore}
 
 /**
  * The end-to-end username->employee match pipeline — the engine's flagship
  * query, re-expressing the reference's POST-/ pipeline
- * (/root/reference/main.py:136-221) as one declarative Spark plan:
+ * (main.py:136-221):
  *
- *   usernames ⟕ [similarity cross join] broadcast(distinct employee names,
- *                                                  each with its employees)
- *     -> score (MatchScore expression tree, thresholded: see below)
- *     -> explode each name's employees, only for pairs scoring >= 50
- *     -> ∪ one presence row per username (null emp_id and score)
- *     -> per-username top-k (bounded-heap `topk_match` aggregate, k=4)
- *     -> dense-rank confidence labels (ties share a rank — golden semantics
- *        pinned by the reference's assets/example.png)
- *     -> rows scoring >= 50, and NOT-FOUND sentinels derived from the rn=1
- *        row in the same pass (a presence row at rn=1: no qualifying pair)
+ *   employees -> distinct name tuples, each with its invariants and its
+ *                first k employees ([[prepareRoster]]: one eager job,
+ *                collected and broadcast; decoded once per executor)
+ *   usernames -> distinct -> invariants -> round-robin spread
+ *     -> per username, the filter-verify top-k operator ([[MatchTopK]]):
+ *        bound every name, verify candidates in descending bound order
+ *        until the bound falls below the running k-th best score, keep a
+ *        k-heap of employees in (score desc, emp_id asc, employee_name asc)
+ *        order, emit the rows with dense-rank confidence labels (ties share
+ *        a rank — golden semantics pinned by the reference's
+ *        assets/example.png), or a USER NOT FOUND sentinel
  *
- * Threshold prune (filter, then verify): the output keeps only rows
- * scoring >= the threshold, plus a sentinel built from constants for a
- * username with none. So [[matchOutput]] scores its pairs through
- * [[MatchScore.withScore]] with the threshold: a pair whose upper bound
- * (character-histogram caps on the fuzzy terms plus the exact bonuses) is
- * below the threshold never runs the fuzzy kernels, and every pair below
- * the threshold (about 95% on the wide synthetic input) is dropped at the
- * fan-out, before the top-k heap. Qualifying rows sort before every
- * dropped one, so the top-k heap and the dense ranks of qualifying rows
- * come out exactly as without the prune, and the presence rows supply the
- * sentinels the dropped rows would have. [[scoredPairs]] stays exact.
+ * The score has ONE definition, [[graft.scoring.PairScore]]: the operator
+ * calls it directly on the decoded roster, and [[scoredPairs]] (the exact
+ * nested-loop join over every pair) evaluates it through
+ * [[MatchScore.withScore]]'s codegen expression.
+ *
+ * Filter, then verify: a name's bound is >= its exact score, so a name
+ * whose bound is below the threshold, or below the k-th best score already
+ * held, cannot enter the top k; the output is exactly the top k of every
+ * pair scoring >= the threshold (ScoreBoundSpec pins it against the
+ * unpruned [[scoredPairs]] at several thresholds and k). On the wide
+ * perfbench input 37,209 of 2,494,375 pairs reach the exact kernels.
  *
  * Scale design (100 TB usernames, roster-sized employees):
- *  - the employee side is hoisted+broadcast, so the cross join is a
- *    BroadcastNestedLoopJoin with NO shuffle of the big side;
- *  - per-username and per-employee invariants (phonetic codes, splits,
- *    bound profiles) are computed O(U)+O(E) times before the join, not
- *    O(U*E) times inside it;
- *  - past [[matchOutput]]'s `distinct()`, the username side is shuffled
- *    twice: by the round-robin spread ahead of the scoring join (see
- *    [[scoredPairs]]) and by the top-k aggregate's hash partitioning on
- *    `username`; partial aggregation bounds the latter at k rows per
- *    username per map task, and the dense-rank window reuses it;
+ *  - the roster is broadcast-small: one collected copy of its distinct
+ *    names, read by every task; the username side never joins or
+ *    shuffle-sorts against it;
+ *  - per-username and per-name invariants (phonetic codes, splits, bound
+ *    profiles, token arrays) are computed O(U)+O(E) times before scoring,
+ *    not O(U*E) times inside it;
+ *  - past `distinct()`, the usernames are shuffled once more, round robin
+ *    over 4 x defaultParallelism tasks ([[spread]]); each task ranks its
+ *    usernames completely, so no top-k aggregate, window or second
+ *    exchange follows;
  *  - deterministic tiebreak (score desc, emp_id asc, employee_name asc) —
  *    the reference's pandas unstable sort makes ties unspecified
  *    (SURVEY.md §7.4.1).
@@ -53,13 +55,13 @@ object MatchPipeline {
   val TopK = 4               // NUM_TOP_GROUP_MATCHES + NUM_ADDITIONAL (main.py:19-21)
   val ScoreThreshold = 50.0  // main.py:22
 
-  /** Dense-rank -> confidence label decode (main.py:181-186). */
-  def rankLabel(r: Column): Column =
-    when(r === 1, "HIGH CONFIDENCE")
-      .when(r === 2, "2nd HIGH CONFIDENCE")
-      .when(r === 3, "3rd HIGH CONFIDENCE")
-      .when(r === 4, "NOT SURE")
-      .otherwise("")   // dict.get default, main.py:196
+  /** Dense-rank -> confidence label decode (main.py:181-186), "" past the
+    * last label (dict.get default, main.py:196). */
+  def rankLabel(r: Column): Column = {
+    val ls = MatchTopK.Labels
+    ls.indices.tail.foldLeft(when(r === 1, ls.head))((w, i) => w.when(r === i + 1, ls(i)))
+      .otherwise("")
+  }
 
   /** Usernames with hoisted scoring invariants. */
   def prepareUsernames(usernames: DataFrame): DataFrame =
@@ -77,7 +79,8 @@ object MatchPipeline {
   private def invariantCols(inv: Map[String, Column]): Seq[Column] =
     inv.toSeq.map { case (name, c) => c.as(name) }
 
-  /** Scored candidate pairs: every (username, employee) with its score.
+  /** Scored candidate pairs: every (username, employee) with its exact
+    * score, as (username, emp_id, employee_name, score).
     *
     * The cross join is COMPUTE-bound, not IO-bound: each stream row fans out
     * into |roster| kernel evaluations, so task parallelism — not data volume
@@ -98,77 +101,66 @@ object MatchPipeline {
     * coalesces (as [[matchOutput]]'s `distinct()` does), and the scoring
     * stage then runs on one task. An explicit numPartitions repartition is
     * never AQE-coalesced (pinned in PlanShapeSpec). */
-  def scoredPairs(usernames: DataFrame, employees: DataFrame): DataFrame =
-    scoredPairsCapped(usernames, employees, None, None)
+  def scoredPairs(usernames: DataFrame, employees: DataFrame): DataFrame = {
+    val scored = MatchScore.withScore(
+      spread(usernames).crossJoin(broadcast(nameTuples(employees, None))), "n")
+    scored.select(col("username"), col("score"), explode(col("n_emps")).as("__emp"))
+      .select(col("username"), col("__emp.emp_id").as("emp_id"),
+        col("__emp.employee_name").as("employee_name"), col("score"))
+  }
 
-  /** [[scoredPairs]] with an optional per-name-tuple cap on the fan-out
-    * roster and an optional score threshold — the form [[matchOutput]]
-    * consumes (see the FAN-OUT CAP and SCORE-GATED FAN-OUT comments inside,
-    * and [[MatchScore.withScore]] for the threshold prune). With a
-    * threshold, only pairs scoring >= it are emitted, each with its exact
-    * score. `fanoutTopK = None, threshold = None` is the full, exact pair
-    * relation: (username, emp_id, employee_name, score). */
-  private def scoredPairsCapped(usernames: DataFrame, employees: DataFrame,
-                                fanoutTopK: Option[Int],
-                                threshold: Option[Double]): DataFrame = {
-    // 4 waves of fine-grained tasks: with one task per core a single
-    // straggler (GC pause, CPU steal) stretches the whole stage; finer
-    // slices rebalance.
-    //
-    // The username invariants are derived BEFORE that exchange. Whole-stage
-    // codegen defers a deterministic projection's outputs to their first
-    // use, and the nested-loop join first uses its stream side inside its
-    // loop over the broadcast roster: derived in the join's stage, every
-    // username invariant (metaphone, soundex, splits, bound profile) runs
-    // once per PAIR (about a quarter of the wide scoring stage's samples
-    // in a JFR profile). Derived before the exchange, the shuffle writes
-    // them once per username and the join reads plain fields.
-    val u = prepareUsernames(usernames)
+  /** The usernames with their invariants ([[prepareUsernames]]), spread
+    * round robin over 4 waves of fine-grained tasks: with one task per core
+    * a single straggler (GC pause, CPU steal) stretches the whole stage;
+    * finer slices rebalance.
+    *
+    * The invariants are derived BEFORE that exchange. Whole-stage codegen
+    * defers a deterministic projection's outputs to their first use, and
+    * the nested-loop join of [[scoredPairs]] first uses its stream side
+    * inside its loop over the broadcast roster: derived in the join's stage,
+    * every username invariant (metaphone, soundex, splits, bound profile)
+    * runs once per PAIR (about a quarter of the wide scoring stage's
+    * samples in a JFR profile). Derived before the exchange, the shuffle
+    * writes them once per username and the consumer reads plain fields. */
+  private def spread(usernames: DataFrame): DataFrame =
+    prepareUsernames(usernames)
       .repartition(4 * usernames.sparkSession.sparkContext.defaultParallelism)
-    // DISTINCT-NAME MEMOIZATION (r20, guide §1.2 "the distributed
-    // algorithm"): the score is a pure function of (username, e_first,
-    // e_last, e_full) — emp_id never enters it — so the expensive kernels
-    // run once per (username, DISTINCT name tuple). One groupBy over the
-    // roster yields those tuples, each carrying its employees as `n_emps`:
-    // (emp_id, employee_name) structs sorted ascending, nulls first (the
-    // top-k tiebreak order). On the bench's 64-name/20k-employee roster
-    // this is ~300x fewer kernel evaluations (OPTIMIZATION_r20.md). The
-    // username side crosses ONE BroadcastNestedLoopJoin and no exchange;
-    // the broadcast build is roster-bounded. Grouping keeps null name
-    // parts together, so a null-named employee pairs with every username
-    // (score 0 via null propagation) as in a direct cross join.
+
+  /** The roster's distinct name tuples, each with its invariants (`n_*`,
+    * [[MatchScore.employeeInvariants]] with `e_` renamed) and its employees
+    * as `n_emps`: (emp_id, employee_name) structs sorted ascending, nulls
+    * first (the top-k tiebreak order).
+    *
+    * DISTINCT-NAME MEMOIZATION (r20, guide §1.2 "the distributed
+    * algorithm"): the score is a pure function of (username, e_first,
+    * e_last, e_full) — emp_id never enters it — so the expensive kernels run
+    * once per (username, DISTINCT name tuple). On the bench's
+    * 64-name/20k-employee roster this is ~300x fewer kernel evaluations
+    * (OPTIMIZATION_r20.md). Grouping keeps null name parts together, so a
+    * null-named employee pairs with every username (score 0 via null
+    * propagation) as in a direct cross join.
+    *
+    * FAN-OUT CAP (`topK`, top-k callers only): every employee of a name
+    * tuple shares that tuple's score, so within one username's (score desc,
+    * emp_id asc, employee_name asc) total order the k-th best row OF A TUPLE
+    * is preceded by k-1 same-score rows of that same tuple — an employee
+    * past the k-th of its tuple can never reach any username's top-k.
+    * Keeping each tuple's k smallest (emp_id, employee_name) rows is EXACT
+    * for top-k consumption. Duplicate rows within a tuple are
+    * interchangeable in every column the top-k output can reference. */
+  private def nameTuples(employees: DataFrame, topK: Option[Int]): DataFrame = {
     val inv = MatchScore.employeeInvariants(
       col("first_name"), col("last_name"), col("employee_name"))
     val emps = sort_array(collect_list(struct(col("emp_id"), col("employee_name"))))
-    // FAN-OUT CAP (r20, top-k callers only): every employee of a name tuple
-    // shares that tuple's score, so within one username's (score desc,
-    // emp_id asc, employee_name asc) total order the k-th best row OF A
-    // TUPLE is preceded by k-1 same-score rows of that same tuple — an
-    // employee past the k-th of its tuple can never reach any username's
-    // top-k. Keeping each tuple's k smallest (emp_id, employee_name) rows
-    // is EXACT for top-k consumption. Duplicate rows within a tuple are
-    // interchangeable in every column the top-k output can reference.
     val names = employees
       .groupBy(inv("e_first").as("n_first"), inv("e_last").as("n_last"),
         inv("e_full").as("n_full"))
-      .agg(fanoutTopK.fold(emps)(k => slice(emps, 1, k)).as("n_emps"))
+      .agg(topK.fold(emps)(k => slice(emps, 1, k)).as("n_emps"))
     // invariants recomputed on the distinct tuples (n_first, n_last and
     // n_full among them, re-normalized: lower/trim are idempotent)
     val nameInv = MatchScore.employeeInvariants(col("n_first"), col("n_last"), col("n_full"))
       .toSeq.map { case (name, c) => c.as(name.replaceFirst("^e_", "n_")) }
-    val scored = MatchScore.withScore(
-      u.crossJoin(broadcast(names.select(col("n_emps") +: nameInv: _*))), "n", threshold)
-    // SCORE-GATED FAN-OUT: one generator emits a name's employees. With a
-    // threshold it emits them only for pairs that reach it, so the ~95% of
-    // pairs below it stop here, before any row copy or top-k heap probe;
-    // [[matchOutput]] restores their usernames' sentinels from presence
-    // rows. A generator, not a filter: Catalyst pushes a `score >= t`
-    // filter into the nested-loop join's condition, where the bound would
-    // be evaluated a second time on every pruned pair.
-    val fan = threshold.fold(col("n_emps"))(t => when(col("score") >= t, col("n_emps")))
-    scored.select(col("username"), col("score"), explode(fan).as("__emp"))
-      .select(col("username"), col("__emp.emp_id").as("emp_id"),
-        col("__emp.employee_name").as("employee_name"), col("score"))
+    names.select(col("n_emps") +: nameInv: _*)
   }
 
   /** Per-username top-k of a scored (username, emp_id, employee_name,
@@ -212,9 +204,8 @@ object MatchPipeline {
     * reaches a threshold, so a presence row cannot displace or re-rank a
     * real row; it surfaces at rn = 1 exactly when its username has no
     * scored row, and [[outputRows]] turns it into that username's
-    * sentinel. The one sentinel mechanism of [[matchOutput]] (empty
-    * roster, every pair below the threshold) and of
-    * [[MatchBlocking.matchOutput]] (no candidates). */
+    * sentinel: the sentinel mechanism of [[MatchBlocking.matchOutput]] (no
+    * candidates, or none at or above the threshold). */
   private[graft] def withPresenceRows(scored: DataFrame, users: DataFrame): DataFrame = {
     val nul = lit(null).cast("string")
     scored.select("username", "emp_id", "employee_name", "score")
@@ -226,8 +217,9 @@ object MatchPipeline {
     * >= `threshold`, and a USER NOT FOUND sentinel, built from constants
     * only, for each username whose BEST row (rn = 1) is below it or is a
     * presence row ([[withPresenceRows]]) — a username with no qualifying
-    * match gets its sentinel in the same pass. Shared by [[matchOutput]]
-    * and [[MatchBlocking.matchOutput]]. */
+    * match gets its sentinel in the same pass. The output of
+    * [[MatchBlocking.matchOutput]]; over the exact [[scoredPairs]], the
+    * unpruned form of [[matchOutput]]. */
   private[graft] def outputRows(ranked: DataFrame, threshold: Double): DataFrame = {
     val qualifies = col("score") >= threshold
     ranked
@@ -249,23 +241,45 @@ object MatchPipeline {
    * Duplicate-input semantics (PINNED, documented divergence): input
    * usernames are `distinct()`-ed at entry, so a username appearing N times
    * yields ONE result group. The reference iterates input rows
-   * (main.py:158), emitting N identical groups for N identical rows; under
-   * a window partitioned by username VALUE those rows would instead merge
-   * into one partition with each candidate duplicated N times — silently
-   * corrupting top-k membership. Deduping preserves the per-group content
-   * exactly and keeps the window semantics well-defined; callers wanting
+   * (main.py:158), emitting N identical groups for N identical rows; ranked
+   * by username VALUE those rows would instead merge into one group with
+   * each candidate duplicated N times — silently corrupting top-k
+   * membership. Deduping preserves the per-group content exactly and keeps
+   * the per-username ranking well-defined; callers wanting
    * the reference's repeated groups can re-join the output against their
    * raw input. Pinned by MatchPipelineSpec ("duplicate usernames").
    */
   def matchOutput(usernames: DataFrame, employees: DataFrame,
-                  topK: Int = TopK, threshold: Double = ScoreThreshold): DataFrame = {
-    val users = usernames
-      .select(col("username").cast("string").as("username")).distinct()
-    // only qualifying pairs reach the top-k heap; a username without one
-    // (every pair below the threshold, or an empty roster) keeps its
-    // presence row, which becomes its sentinel
-    val scored = scoredPairsCapped(users, employees, Some(topK), Some(threshold))
-    outputRows(rankedTopKOf(withPresenceRows(scored, users), topK), threshold)
+                  topK: Int = TopK, threshold: Double = ScoreThreshold): DataFrame =
+    matchPrepared(usernames, prepareRoster(employees, topK), threshold)
+
+  /** Prepares `employees` for [[matchPrepared]] with one eager job: collects
+    * its distinct name tuples with their invariants and their `topK` first
+    * employees ([[nameTuples]]) and broadcasts them. The roster is
+    * broadcast-small by the pipeline's own contract. */
+  def prepareRoster(employees: DataFrame, topK: Int = TopK): PreparedRoster = {
+    val qe = nameTuples(employees, Some(topK))
+      .select(DecodedNames.Layout.map(n => col(n.replaceFirst("^e_", "n_"))) :+ col("n_emps"): _*)
+      .queryExecution
+    val rows = SQLExecution.withNewExecutionId(qe, Some("match roster"))(qe.executedPlan.executeCollect())
+    new PreparedRoster(employees.sparkSession.sparkContext.broadcast(new RosterRows(rows)), topK)
+  }
+
+  /** [[matchOutput]] against a [[prepareRoster]] handle: the distinct
+    * usernames, spread round robin with their invariants ([[spread]]), each
+    * matched by the filter-verify top-k operator ([[MatchTopK]]) against the
+    * broadcast roster. Counts the pairs it bounds and verifies in the
+    * accumulators `match.pairs_bounded` and `match.pairs_verified`. */
+  def matchPrepared(usernames: DataFrame, roster: PreparedRoster,
+                    threshold: Double = ScoreThreshold): DataFrame = {
+    val sc = usernames.sparkSession.sparkContext
+    val bounded = sc.longAccumulator("match.pairs_bounded")
+    val verified = sc.longAccumulator("match.pairs_verified")
+    val (names, k) = (roster.names, roster.topK)
+    spread(usernames.select(col("username").cast("string").as("username")).distinct())
+      .select(MatchTopK.UserLayout.map(col): _*)
+      .mapPartitions(MatchTopK.run(names, k, threshold, bounded, verified) _)(
+        Encoders.row(MatchTopK.OutputSchema))
   }
 
   /** Name-pile-up factor above which the EXACT broadcast-NLJ path beats

@@ -2,12 +2,18 @@ package graft.scoring
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnShim
 import graft.functions._
 
 /**
- * The composite username-vs-employee match score as ONE Catalyst Column
- * expression tree — the declarative re-expression of the reference's
- * `compute_match_score` (/root/reference/main.py:25-90).
+ * The composite username-vs-employee match score as Catalyst columns — the
+ * re-expression of the reference's `compute_match_score`
+ * (the reference's main.py:25-90). The score itself is defined ONCE, in
+ * Scala, by [[PairScore]]; this object derives the hoisted invariants it
+ * reads and wraps it as codegen expressions ([[scoreFromInvariants]],
+ * [[compositeUpperBound]], [[withScore]]), which the nested-loop
+ * `scoredPairs` and the blocked path evaluate. The exact path's top-k
+ * operator calls [[PairScore]] directly on a decoded roster.
  *
  * Weighting (main.py:76-89), evaluated in the same order:
  *   0.2*ratio(u, full) + 0.2*partial(u, full) + 0.2*token_set(u, full)
@@ -18,15 +24,14 @@ import graft.functions._
  * capped at 100; pre-empted by 100.0 when the username equals one of the 8
  * exact first/last patterns (main.py:36-47).
  *
- * Being a pure expression tree (CaseWhen over codegen'd kernels), the
- * pattern short-circuit skips every fuzzy/phonetic kernel exactly like the
- * reference's early `return` — in both interpreted and whole-stage-codegen
- * paths — and the whole score inlines into the cross-join stage with no UDF
+ * The pattern short-circuit skips every fuzzy kernel exactly like the
+ * reference's early `return`, and the expressions generate code, so the
+ * score runs inside the cross-join stage's whole-stage codegen with no UDF
  * serialization boundary.
  *
  * Thresholded form ([[withScore]] with a threshold): a second branch sits
- * between the pattern short-circuit and the kernels,
- * `when(isPattern, 100).when(ub < t, ub).otherwise(<exact score>)`. `ub`
+ * between the pattern short-circuit and the kernels, `if (isPattern) 100
+ * else if (ub < t) ub else <exact score>`. `ub`
  * ([[compositeUpperBound]]) is the composite with each fuzzy term replaced
  * by an integer upper bound from character histograms — an LCS matches at
  * most min(count_a(c), count_b(c)) copies of each char, so ratio <=
@@ -92,13 +97,13 @@ object MatchScore {
         concat(f, l), concat(l, f),
         concat(f, lit(" "), l), concat(l, lit(" "), f)),
       // every pattern is |f|+|l| or |f|+|l|+1 bytes long: the length guard
-      // in scoreFromInvariants compares this before probing the patterns
+      // of PairScore.isPattern compares this before probing the patterns
       "e_fl_bytes" -> patternBaseBytes(f, l),
       // sorted-distinct token arrays of each B side of the three token-set
       // terms (r21): rapidfuzz default_process + tokenize + sort + dedup
       // hoisted to once per EMPLOYEE instead of once per scored pair — the
       // dominant residual per-pair cost after the r20 kernel pass. The
-      // composite consumes these through fuzz_composite_pre; scores are
+      // composite consumes these through Fuzz.compositeFuzzPre; scores are
       // bit-identical (the token-set merge sees the same arrays).
       "e_first_toks" -> fuzz_preproc_tokens(f),
       "e_last_toks" -> fuzz_preproc_tokens(l),
@@ -112,7 +117,8 @@ object MatchScore {
   }
 
   /**
-   * Score from the hoisted invariant columns. `u_*` columns come from
+   * Score from the hoisted invariant columns: [[PairScore.score]] as one
+   * codegen expression ([[PairScoreExpr]]). `u_*` columns come from
    * [[usernameInvariants]], `e_*` from [[employeeInvariants]].
    *
    * `bound = Some((ub, t))` adds the threshold prune between the pattern
@@ -137,82 +143,37 @@ object MatchScore {
       // hoisted byte lengths (u_bytes from usernameInvariants, e_fl_bytes
       // from employeeInvariants); the defaults derive them inline
       uBytes: Column = null, flBytes: Column = null): Column = {
-
-    // A pattern is f and l joined by nothing or by one ASCII separator, so
-    // a username can equal one only when its byte length is |f|+|l| or
-    // |f|+|l|+1. The guard is two int compares; the probe it skips builds
-    // eight string views per pair. Null inputs give a null guard and a
-    // null probe alike, and a CaseWhen treats both as false.
-    val uLen = if (uBytes == null) octet_length(u) else uBytes
-    val flLen = if (flBytes == null) patternBaseBytes(f, l) else flBytes
-    val isPattern = (uLen === flLen || uLen === flLen + 1) && array_contains(ePatterns, u)
-
     // dead heuristic in the reference (main.py:54): 0 either way; optional
     // resurrected version behind the flag
     val numberBonus =
       if (enableEmpIdBonus)
         when(u.contains(lower(trim(empId.cast("string")))), lit(10)).otherwise(lit(0))
       else lit(0)
-
-    // the five fuzzy terms are fused into one codegen kernel call
-    // (Fuzz.compositeFuzzPre): bit-identical weighted sum — including null
-    // propagation (each token array is null exactly when its source string
-    // is) — with the username-side token preprocessing memoized per thread
-    // and the employee-side token preprocessing hoisted to the broadcast
-    // side instead of re-derived per pair
-    val composite = plusBonuses(
-      fuzz_composite_pre(u, en,
-        if (fToks == null) fuzz_preproc_tokens(f) else fToks,
-        if (lToks == null) fuzz_preproc_tokens(l) else lToks,
-        if (enToks == null) fuzz_preproc_tokens(en) else enToks),
-      u, uPart1, uPart2, uSdx, uMp, uInitial, uDot2Initial, f, l,
-      eSdxFirst, eSdxLast, eMpFirst, eMpLast, eFirstInitial, numberBonus)
-
-    // coalesce guards NULL inputs: a null composite would otherwise slip
-    // through least() (which skips nulls) and score 100. Null/absent names
-    // score 0 — same outcome as the reference's unmatchable rows.
-    val head = when(isPattern, lit(100.0))
-    bound.fold(head) { case (ub, t) => head.when(ub < t, ub) }
-      .otherwise(least(coalesce(composite, lit(0.0)), lit(100.0)))
-  }
-
-  /** The uncapped composite: the five fuzzy terms `fuzz` plus the phonetic,
-    * split, initial and emp-id bonuses, added left to right. Exact score and
-    * bound both go through here, so they differ only in `fuzz`: every add is
-    * monotone, hence fuzz <= fuzz' gives composite <= composite'. */
-  private def plusBonuses(fuzz: Column,
-      u: Column, uPart1: Column, uPart2: Column, uSdx: Column, uMp: Column,
-      uInitial: Column, uDot2Initial: Column, f: Column, l: Column,
-      eSdxFirst: Column, eSdxLast: Column, eMpFirst: Column, eMpLast: Column,
-      eFirstInitial: Column, numberBonus: Column): Column = {
-    val splitBonus = when(
-      (uPart1 === f && uPart2 === l) || (uPart2 === f && uPart1 === l), lit(10)
-    ).otherwise(lit(0))
-    val initialBonus =
-      when(u =!= "" && f =!= "" && uInitial === eFirstInitial, lit(5)).otherwise(lit(0)) +
-      when(uDot2Initial =!= "" && uDot2Initial === eFirstInitial, lit(5)).otherwise(lit(0))
-    fuzz +
-      (uSdx === eSdxLast).cast("int") * lit(6) +
-      (uMp === eMpLast).cast("int") * lit(7) +
-      (uSdx === eSdxFirst).cast("int") * lit(3) +
-      (uMp === eMpFirst).cast("int") * lit(3) +
-      splitBonus + initialBonus + numberBonus
+    def or(c: Column, dflt: => Column) = if (c == null) dflt else c
+    val (ub, t) = bound.getOrElse((lit(null).cast("double"), Double.NegativeInfinity))
+    ColumnShim.col(PairScoreExpr(Seq(
+      u, uPart1, uPart2, uSdx, uMp, uInitial, uDot2Initial, f, l, en,
+      eSdxFirst, eSdxLast, eMpFirst, eMpLast, eFirstInitial, ePatterns, numberBonus.cast("double"),
+      or(fToks, fuzz_preproc_tokens(f)), or(lToks, fuzz_preproc_tokens(l)),
+      or(enToks, fuzz_preproc_tokens(en)),
+      or(uBytes, octet_length(u)), or(flBytes, patternBaseBytes(f, l)), ub)
+      .map(ColumnShim.expr), t))
   }
 
   /** Upper bound on the uncapped composite of a pair frame laid out as in
-    * [[withScore]]: the composite with [[fuzz_composite_pre]] replaced by
-    * [[fuzz_composite_ub]] over the hoisted bound profiles
-    * (`Fuzz.compositeFuzzUB`: integer bounds from character histograms,
-    * summed with the kernel's weights and order) and the same exact
-    * bonuses. It is >= the composite, so >= the score, on every pair, and
-    * null exactly where the composite is. */
+    * [[withScore]]: [[PairScore.compositeBound]] as one codegen expression,
+    * the composite with its fuzzy terms replaced by `Fuzz.compositeFuzzUB`
+    * over the hoisted bound profiles (integer bounds from character
+    * histograms, summed with the kernel's weights and order) and the same
+    * exact bonuses. It is >= the composite, so >= the score, on every pair,
+    * and null exactly where the composite is. */
   def compositeUpperBound(side: String): Column = {
     def e(n: String) = col(s"${side}_$n")
-    plusBonuses(
-      fuzz_composite_ub(u("prof"), e("full_prof"), e("last_prof"), e("first_prof")),
+    ColumnShim.col(CompositeBoundExpr(Seq(
+      u("prof"), e("full_prof"), e("last_prof"), e("first_prof"),
       u("norm"), u("part1"), u("part2"), u("sdx"), u("mp"), u("initial"), u("dot2_initial"),
       e("first"), e("last"), e("sdx_first"), e("sdx_last"), e("mp_first"), e("mp_last"),
-      e("first_initial"), lit(0))
+      e("first_initial")).map(ColumnShim.expr)))
   }
 
   private def u(name: String): Column = col(s"u_$name")
@@ -239,8 +200,7 @@ object MatchScore {
    */
   def withScore(pairs: DataFrame, side: String, threshold: Option[Double] = None): DataFrame = {
     def e(n: String) = col(s"${side}_$n")
-    // the bound gets a column of its own: inside the CaseWhen it appears in
-    // a condition and a value, and would be evaluated twice per pruned pair
+    // the bound gets a column of its own, projected once per pair
     threshold.fold(pairs)(_ => pairs.withColumn("__ub", compositeUpperBound(side)))
       .withColumn("score", scoreFromInvariants(
         u("norm"), u("part1"), u("part2"), u("sdx"), u("mp"), u("initial"), u("dot2_initial"),

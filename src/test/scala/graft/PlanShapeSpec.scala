@@ -53,11 +53,12 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(p.contains("BroadcastHashJoin"), p)
   }
 
-  test("match pipeline: roster broadcasts into a nested-loop join") {
+  test("match pipeline: usernames map through one top-k operator, never a join") {
+    // the roster is a broadcast variable read by the operator: no join of
+    // any kind, so the username side is never shuffle-sorted against it
     val p = plan(SparkEntry.queries("nm_match_topk")(spark, sf))
-    assert(p.contains("BroadcastNestedLoopJoin"), p)
-    assert(!p.contains("SortMergeJoin"),
-      s"similarity join must never shuffle-sort the username side:\n$p")
+    assert(p.contains("MapPartitions"), p)
+    assert(!p.contains("Join"), s"the match must not join usernames with the roster:\n$p")
   }
 
   test("scoredPairs always spreads usernames round robin") {
@@ -78,9 +79,9 @@ class PlanShapeSpec extends AnyFunSuite {
     // an explicit numPartitions input reads as already spread in
     // sparkPlan, but matchOutput's distinct() exchange (added later by
     // EnsureRequirements) is AQE-coalesced on a small input: without the
-    // spread the nested-loop join's stream side is ONE partition
+    // spread the top-k operator's input is ONE partition
+    import org.apache.spark.sql.execution.MapPartitionsExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
     object aqe extends AdaptiveSparkPlanHelper
     val par = spark.sparkContext.defaultParallelism
     val employees = graft.schema.EmployeeNormalizer.normalize(spark.read.option("header", "true")
@@ -93,11 +94,9 @@ class PlanShapeSpec extends AnyFunSuite {
       val out = graft.pipeline.MatchPipeline.matchOutput(usernames.repartition(2 * par), employees)
       val rows = out.collect().map(_.toString).sorted
       // the final adaptive plan: query stages are leaves to plain collect
-      val nlj = aqe.collect(out.queryExecution.executedPlan) {
-        case j: BroadcastNestedLoopJoinExec => j
-      }
-      assert(nlj.size === 1, out.queryExecution.executedPlan)
-      assert(nlj.head.left.outputPartitioning.numPartitions === 4 * par,
+      val op = aqe.collect(out.queryExecution.executedPlan) { case m: MapPartitionsExec => m }
+      assert(op.size === 1, out.queryExecution.executedPlan)
+      assert(op.head.child.outputPartitioning.numPartitions === 4 * par,
         out.queryExecution.executedPlan)
       val want = graft.pipeline.MatchPipeline.matchOutput(usernames, employees)
         .collect().map(_.toString).sorted
@@ -105,31 +104,33 @@ class PlanShapeSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
-  test("score-gated fan-out: matchOutput plans 1 broadcast, 1 condition-free nested-loop join, no hash join") {
-    // one broadcast (the distinct names, each carrying its employees) into
-    // one nested-loop join with no condition: the fan-out is a generator
-    // after the score, not a hash join, and the sentinels come from
-    // presence rows, not an anti join. Each kernel appears once: a
-    // `score >= t` filter pushed into the join condition would copy the
-    // score's CaseWhen, and with it both kernels (AQE off so every
-    // exchange is visible)
+  test("filter-verify top-k: no nested-loop join, no topk_match aggregate, no window") {
+    // the usernames cross two exchanges (distinct, then the round-robin
+    // spread) into one per-username operator that scores, ranks and labels
+    // against the broadcast roster: no join, no broadcast exchange, no
+    // top-k aggregate, no dense-rank window and no score expression in the
+    // plan (AQE off so every exchange is visible)
+    import org.apache.spark.sql.execution.MapPartitionsExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
-    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
     val employees = graft.schema.EmployeeNormalizer.normalize(spark.read.option("header", "true")
       .csv(s"${SparkTestBase.ReferenceDir}/employee.csv"))
     val usernames = spark.read.option("header", "true")
       .csv(s"${SparkTestBase.ReferenceDir}/usernames.csv").select("username")
     val p = preparedPlan(graft.pipeline.MatchPipeline.matchOutput(usernames, employees))
-    assert(p.collect { case e: ShuffleExchangeExec => e }.size === 4, p)
-    assert(p.collect { case e: BroadcastExchangeExec => e }.size === 1, p)
-    val nlj = p.collect { case j: BroadcastNestedLoopJoinExec => j }
-    assert(nlj.size === 1 && nlj.head.condition.isEmpty, p)
-    assert(p.collect { case j: BroadcastHashJoinExec => j }.isEmpty, p)
-    val kernels = p.flatMap(_.expressions).flatMap(_.collect {
-      case _: graft.functions.FuzzCompositePre => "pre"
-      case _: graft.functions.FuzzCompositeUB => "ub"
+    assert(p.collect { case j: BaseJoinExec => j }.isEmpty, p)
+    assert(p.collect { case e: BroadcastExchangeExec => e }.isEmpty, p)
+    assert(p.collect { case e: ShuffleExchangeExec => e }.size === 2, p)
+    assert(p.collect { case w: WindowExec => w }.isEmpty, p)
+    val aggs = p.collect { case a: BaseAggregateExec => a }.flatMap(_.aggregateExpressions)
+    assert(!aggs.exists(_.aggregateFunction.isInstanceOf[graft.functions.TopKMatchRows]), p)
+    assert(p.collect { case m: MapPartitionsExec => m }.size === 1, p)
+    val scores = p.flatMap(_.expressions).flatMap(_.collect {
+      case e: graft.scoring.PairScoreCall => e
     })
-    assert(kernels.sorted === Seq("pre", "ub"), p)
+    assert(scores.isEmpty, p)
   }
 
   test("per-group top-k installs the pre-shuffle WindowGroupLimit") {

@@ -179,11 +179,11 @@ class ScoreBoundSpec extends AnyFunSuite {
   /** The unpruned form of matchOutput: the top-k of the exact scoredPairs,
     * through the same output projection. */
   private def unprunedOutput(usernames: DataFrame, roster: DataFrame,
-                             threshold: Double = MatchPipeline.ScoreThreshold): DataFrame = {
+                             threshold: Double = MatchPipeline.ScoreThreshold,
+                             topK: Int = MatchPipeline.TopK): DataFrame = {
     val users = usernames.select(col("username").cast("string").as("username")).distinct()
     MatchPipeline.outputRows(
-      MatchPipeline.rankedTopKOf(MatchPipeline.scoredPairs(users, roster), MatchPipeline.TopK),
-      threshold)
+      MatchPipeline.rankedTopKOf(MatchPipeline.scoredPairs(users, roster), topK), threshold)
   }
 
   private def rows(df: DataFrame): Seq[String] =
@@ -195,8 +195,74 @@ class ScoreBoundSpec extends AnyFunSuite {
     val ref = rows(MatchPipeline.matchOutput(users, roster))
     assert(ref === rows(unprunedOutput(users, roster)))
     assert(ref.size === 403)
+    // the stop rule visits a name while its bound is >= the k-th best score
+    // held: a name tying the k-th score can still win on (emp_id,
+    // employee_name). The reference input has usernames whose k-th and
+    // (k+1)-th best exact scores tie at both k, and at every threshold
+    for (k <- Seq(1, 4))
+      assert(tiesAtK(users, roster, k) > 0, s"no username ties at its k = $k boundary")
+    for (t <- Seq(0.0, 50.0, 80.0, 100.0); k <- Seq(1, 4))
+      assert(rows(MatchPipeline.matchOutput(users, roster, k, t)) ===
+        rows(unprunedOutput(users, roster, t, k)), s"threshold $t, k $k")
     for ((n, u, e, _) <- wideSlices)
       assert(rows(MatchPipeline.matchOutput(u, e)) === rows(unprunedOutput(u, e)), s"n_part=$n")
+  }
+
+  /** Usernames whose k-th and (k+1)-th best exact scores over the
+    * roster's employees are equal. */
+  private def tiesAtK(users: DataFrame, roster: DataFrame, k: Int): Int =
+    MatchPipeline.scoredPairs(users, roster).select("username", "score").collect()
+      .groupBy(_.getString(0)).values
+      .count { rs =>
+        val s = rs.map(_.getDouble(1)).sorted(Ordering[Double].reverse)
+        s.length > k && s(k - 1) == s(k)
+      }
+
+  test("matchOutput counts its bounded and verified pairs on the reference input") {
+    import org.apache.spark.scheduler._
+    val (users, roster) = referenceInputs
+    val sc = spark.sparkContext
+    val tag = "graft.test.job"
+    // the stages of this test's jobs, and the task updates of the two
+    // accumulators in them
+    val stages = collection.concurrent.TrieMap.empty[Int, Unit]
+    val sums = collection.concurrent.TrieMap.empty[String, Long]
+    val markerDone = new java.util.concurrent.CountDownLatch(1)
+    @volatile var markerJob = -1
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(tag)) match {
+          case Some("match") => e.stageIds.foreach(stages.put(_, ()))
+          case Some("marker") => markerJob = e.jobId
+          case _ =>
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == markerJob) markerDone.countDown()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId)) e.taskInfo.accumulables.foreach { a =>
+          for (n <- a.name if n.startsWith("match.pairs_"); u <- a.update)
+            sums.put(n, sums.getOrElse(n, 0L) + u.toString.toLong)
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, "match")
+      assert(MatchPipeline.matchOutput(users, roster).collect().length === 403)
+      // the bus delivers events in order: once the marker job's end
+      // arrives, every task of the match has been seen
+      sc.setLocalProperty(tag, "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(markerDone.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
+    // 110 distinct usernames x 147 distinct names, all bounded. The exact
+    // score runs on the pairs whose bound reaches max(50, the username's
+    // final 4th best), whatever the visiting order among equal bounds:
+    // 3.7x fewer than the 5,352 pairs whose bound reaches 50
+    assert(sums.get("match.pairs_bounded") === Some(110L * 147))
+    assert(sums.get("match.pairs_verified") === Some(1439L))
   }
 
   private val notFound = "|N/A|USER NOT FOUND|0.00%|USER NOT FOUND"
